@@ -1,5 +1,8 @@
 """Emulate the driver's correctness gate: run every __spark_entry__ query at
 sf0.01 against its DuckDB oracle and report row-count / schema / value match.
+
+Usage: python scripts/verify_entry.py [sf_dir] [name ...]
+Named queries run alone, without the entry() smoke.
 """
 from __future__ import annotations
 
@@ -12,6 +15,7 @@ from pyspark.sql import SparkSession
 import __spark_entry__ as entrymod
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+NAMES = sys.argv[2:]
 
 import os
 spark = (SparkSession.builder.master("local[8]")
@@ -35,16 +39,18 @@ for t in ("region nation customer supplier part orders lineitem "
           "events documents embeddings").split():
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
 
-print("== entry() smoke ==")
-e = entrymod.entry(spark)
-n = e.count()
-print(f"entry rows: {n}  schema: {[f.name for f in e.schema.fields]}")
-assert n >= 0
+if not NAMES:
+    print("== entry() smoke ==")
+    e = entrymod.entry(spark)
+    n = e.count()
+    print(f"entry rows: {n}  schema: {[f.name for f in e.schema.fields]}")
+    assert n >= 0
 
 qs = entrymod.queries()
 oracles = entrymod.oracle_sql()
+names = NAMES or sorted(qs)
 fails = []
-for name in sorted(qs):
+for name in names:
     t0 = time.time()
     try:
         sp = qs[name](spark, SF_DIR).toPandas()
@@ -73,11 +79,12 @@ for name in sorted(qs):
         status = "OK " if ok else "FAIL"
         if not ok:
             fails.append(name)
-        print(f"{name:28s} rows={len(sp):6d}  {status} {detail} {time.time()-t0:5.1f}s")
+        print(f"{name:28s} rows={len(sp):6d}  {status} {detail} {time.time()-t0:5.1f}s",
+              flush=True)
     except Exception as ex:
         fails.append(name)
         print(f"{name:28s} ERROR {type(ex).__name__}: {str(ex)[:200]}")
 
-print(f"\n{len(qs) - len(fails)}/{len(qs)} queries match")
+print(f"\n{len(names) - len(fails)}/{len(names)} queries match")
 spark.stop()
 sys.exit(1 if fails else 0)

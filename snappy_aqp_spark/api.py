@@ -20,15 +20,18 @@ reference's query-routing semantics.
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import re
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from .catalog import SampleCatalog, SampleInfo
-from .plans.approx_query import (_SAMPLE_CACHE, get_sample,
-                                 invalidate_base_table, run_approx_query)
+from .plans.approx_query import (cached_sample, get_sample,
+                                 invalidate_base_table, run_approx_query,
+                                 set_sample)
 from .sampling.samplers import stratified_sample
 from .specs import ApproxAgg, ApproxQuerySpec, SampleSpec
 from .sql import frontend as fe
@@ -178,7 +181,6 @@ def analyze_text(text: str, catalog: SampleCatalog, defaults: dict,
         # FROM names the sample itself: force that sample (no QCS-based
         # selection) and aggregate over its base-table plan shape — the
         # engine swaps the base scan for this very sample
-        import dataclasses
         parsed = dataclasses.replace(parsed,
                                      from_table=direct.spec.base_table)
         if wc.error is None:
@@ -240,7 +242,6 @@ def _attach_subquery_samples(analyzed, catalog: SampleCatalog,
     true key set admits rows the exact query excludes in a direction the
     error model doesn't cover; scalar subqueries stay exact (their value
     inlines as a literal)."""
-    import dataclasses
     outer = analyzed.spec
     new_subs, changed = [], False
     for sp in outer.where_subs:
@@ -455,6 +456,215 @@ def _drop_touches_filters(name: str, group: list) -> bool:
                for _, _, sp in group)
 
 
+@dataclasses.dataclass(frozen=True)
+class Route:
+    """The one routing decision for a query text (``AQPSession.route``):
+    ``AQPSession.sql`` runs it and ``EXPLAIN AQP`` prints its first eight
+    fields, so the introspection row describes the route that runs.
+
+    ``kind``: exact | approx (the query's own sample) | derived (a
+    FROM-subquery through its sample, the outer query exact; the sample
+    fields describe the leftmost routed subquery) | hll | histogram (the
+    opt-in sketch routes) | strict_throw (a sketch's a-priori error
+    breaks a strict contract; running it raises)."""
+    kind: str
+    base_table: str | None = None
+    qcs: str | None = None
+    sample_method: str | None = None
+    estimator: str | None = None
+    behavior: str | None = None
+    error: float | None = None
+    reason: str | None = None
+    # what run() needs: the SQL text (exact: before error-function
+    # folding; derived: the outer query), the analysis (approx: what runs;
+    # exact: the alias map for folding), the sketch SQL builder and its
+    # kwargs, and per routed FROM-subquery (start, end, alias, analysis,
+    # aggregate aliases), right to left
+    text: str | None = None
+    analyzed: fe.AnalyzedQuery | None = None
+    build: Callable[..., str] | None = None
+    sketch: dict | None = None
+    derived: tuple = ()
+
+    EXPLAIN_SCHEMA = ("route string, base_table string, qcs string, "
+                      "sample_method string, estimator string, "
+                      "behavior string, error double, reason string")
+
+    def explain_row(self) -> tuple:
+        route = (self.kind if self.kind in ("exact", "strict_throw")
+                 else "approx")
+        return (route, self.base_table, self.qcs, self.sample_method,
+                self.estimator, self.behavior, self.error, self.reason)
+
+    def run(self, aqp: "AQPSession") -> DataFrame:
+        if self.kind == "approx":
+            return aqp._run_analyzed(self.analyzed)
+        if self.build is not None:
+            from .dialect import SPARK
+            return aqp.spark.sql(self.build(SPARK, **self.sketch))
+        if self.kind == "strict_throw":
+            from .operators.closedform import ErrorLimitExceededException
+            raise ErrorLimitExceededException(self.reason)
+        if self.kind == "derived":
+            return self._run_derived(aqp)
+        if self.analyzed is None and not fe._ERRFN_CALL_RE.search(self.text):
+            return aqp.spark.sql(self.text)
+        # error functions are valid SQL on any exact plan, including
+        # base-table queries with no WITH clause (the reference's perf
+        # corpus perfQueriesPartialRouteBaseTable.sql): they fold to
+        # 0/NULL (QueryRoutingRules.scala:370-404)
+        return aqp.spark.sql(fe.fold_error_functions(
+            self.text, self.analyzed.parsed if self.analyzed else None))
+
+    def _run_derived(self, aqp: "AQPSession") -> DataFrame:
+        outer, views, routed_aggs = self.text, [], set()
+        try:
+            for start, end, alias, inner, inner_aggs in self.derived:
+                view = f"__aqp_derived_{uuid.uuid4().hex[:8]}"
+                aqp._run_analyzed(inner).createOrReplaceTempView(view)
+                views.append(view)
+                routed_aggs |= inner_aggs
+                outer = (outer[:start] + view
+                         + (f" {alias}" if alias else "") + outer[end:])
+
+            outer = fe._ERRFN_CALL_RE.sub(
+                lambda m: (f"{m.group(2)}_{m.group(1).lower()}"
+                           if m.group(2).lower() in routed_aggs
+                           else m.group(0)), outer)
+            return aqp.spark.sql(fe.fold_error_functions(outer, None))
+        finally:
+            # spark.sql resolves the views into the returned plan eagerly;
+            # dropping them immediately avoids leaking one temp view per
+            # derived query over a long session
+            for view in views:
+                aqp.spark.catalog.dropTempView(view)
+
+
+def _with_clause_sql(error: float | None, confidence: float | None,
+                     behavior: str | None) -> str:
+    out = " WITH ERROR" + (f" {error!r}" if error is not None else "")
+    if confidence is not None:
+        out += f" CONFIDENCE {confidence!r}"
+    if behavior is not None:
+        out += f" BEHAVIOR '{behavior.lower()}'"
+    return out
+
+
+def _sample_fields(spec: ApproxQuerySpec) -> dict:
+    s = spec.sample
+    return dict(base_table=s.base_table, qcs=",".join(s.qcs),
+                sample_method=s.method, estimator=spec.estimator,
+                behavior=spec.behavior, error=float(spec.error))
+
+
+def _norm(s: str) -> str:
+    return re.sub(r"\s+", " ", s.strip()).lower()
+
+
+def _sketch_shape(parsed, agg_re: re.Pattern, agg_fields) -> dict | None:
+    """Shape check shared by the sketch routes, over one parsed SELECT
+    without joins or HAVING: every select item is a selected group key,
+    an aggregate ``agg_re`` matches, or an error function on one of those
+    aggregates; every group key is selected; output names are unique and
+    ORDER BY names outputs. ``agg_fields(aggs)`` validates the matched
+    aggregate items ``[(match, text, alias)]`` and returns (builder
+    kwargs, estimate output names, {normalized error-fn target:
+    error-column fields before the output name}) or None. Returns the
+    builder kwargs or None (the exact route answers)."""
+    table = parsed.from_table
+    quals = {q.lower() for q in (parsed.from_alias, table) if q}
+
+    def dq(s):
+        return fe._strip_qualifiers(s, quals)
+
+    gkeys = [dq(g).strip() for g in parsed.group_by]
+    # expression group keys route too: the builders pre-project them to
+    # generated plain columns before the lattice stages (the same trick
+    # the main rewrite uses for expression QCS), so the only requirements
+    # are balanced text and an output alias when the selected key is not
+    # a plain column
+    if any(not fe._balanced(g) for g in gkeys):
+        return None
+    gset = {_norm(g) for g in gkeys}
+    aggs, err_raw, sel_keys, sel_outs = [], [], [], []
+    for expr, alias in parsed.select_items:
+        e = dq(expr).strip()
+        m = agg_re.match(e)
+        if m and fe._balanced(m.group(1)):
+            aggs.append((m, e, alias))
+            continue
+        if _norm(e) in gset:
+            if alias is None and not re.fullmatch(r"\w+", e):
+                return None       # expression key needs an output name
+            out = alias or e
+            if any(_norm(out) == _norm(o) for o in sel_outs):
+                return None
+            sel_keys.append(e)
+            sel_outs.append(out)
+            continue
+        me = fe._ERRFN_RE.match(e)
+        if me:
+            err_raw.append((me.group(1).lower(),
+                            dq(me.group(2)).strip(), alias))
+            continue
+        return None
+    fields = agg_fields(aggs) if aggs else None
+    if fields is None or gset != {_norm(k) for k in sel_keys}:
+        return None
+    kw, est_outs, targets = fields
+    err_cols: list[tuple] = []
+    for fn, target, alias in err_raw:
+        if _norm(target) not in targets:
+            return None               # errfn targets something else
+        out = alias or fn
+        if any(c[-1] == out for c in err_cols):
+            return None
+        err_cols.append((fn, *targets[_norm(target)], out))
+    # duplicate names across ALL outputs (keys x estimates x errfns) would
+    # generate an ambiguous final SELECT — fall through to the exact route
+    # instead of raising (round-8 ADVICE)
+    outs = [_norm(o) for o in (*sel_outs, *est_outs)
+            ] + [_norm(c[-1]) for c in err_cols]
+    if len(set(outs)) != len(outs):
+        return None
+    order = []
+    for o in parsed.order_by:
+        oo = dq(o).strip()
+        base = re.sub(r"\s+(ASC|DESC)\s*$", "", oo, flags=re.IGNORECASE)
+        if _norm(base) not in outs:
+            return None
+        order.append(oo)
+    return dict(kw, table=table, where=dq(parsed.where),
+                group_keys=tuple(sel_keys), group_out=tuple(sel_outs),
+                err_cols=tuple(err_cols), order_by=tuple(order),
+                limit=parsed.limit)
+
+
+def _hll_fields(aggs):
+    if len(aggs) != 1:
+        return None                   # one sketch per query
+    (m, e, alias), = aggs
+    out = alias or "approx_count_distinct"
+    return ({"col": m.group("arg").strip(), "alias": out}, [out],
+            {_norm(out): (), _norm(e): ()})
+
+
+def _histogram_fields(aggs):
+    col, pcts, targets = None, [], {}
+    for m, e, alias in aggs:
+        c, q = m.group("col"), float(m.group("q"))
+        if (alias is None                      # unaliased estimate column
+                or not 0.0 < q < 1.0
+                or (col is not None and c.lower() != col.lower())
+                or any(a == alias for _, a in pcts)):
+            return None               # one histogram per query
+        col = col or c
+        pcts.append((q, alias))
+        targets[_norm(alias)] = targets[_norm(e)] = (q,)
+    return ({"col": col, "pcts": tuple(pcts)}, [a for _, a in pcts],
+            targets)
+
+
 class AQPSession:
     # Spark-conf property surface (reference SnappyAQPSessionState.scala:222:
     # spark.sql.aqp.{error,confidence,behavior,numBootStrapTrials}).
@@ -633,7 +843,7 @@ class AQPSession:
         out = {}
         for n, sp in named_specs:
             sdf = self.spark.read.parquet(subdirs[n])
-            _SAMPLE_CACHE[(sp, self._token)] = sdf
+            set_sample(sp, self._token, sdf)
             self.catalog.register(SampleInfo(n, sp, subdirs[n]))
             sdf.createOrReplaceTempView(n)
             out[n] = sdf
@@ -681,15 +891,13 @@ class AQPSession:
                              for f in os.listdir(path)))
         if not attaching:
             self._derive_col_bounds(self.tables[spec.base_table], spec)
-        key = (spec, self._token)
         if rebuild:
             # rebuild must actually re-sample: drop the cached sample so
             # the build branch below runs and overwrites any persisted
             # parquet at ``path``
-            _SAMPLE_CACHE.pop(key, None)
-        if key in _SAMPLE_CACHE:
-            sample = _SAMPLE_CACHE[key]
-        elif attaching:
+            set_sample(spec, self._token, None)
+        sample = cached_sample(spec, self._token)
+        if sample is None and attaching:
             # ATTACH instead of rebuild: the sample content is a
             # deterministic function of (spec, base data), so a previously
             # persisted sample IS the sample — reusing it skips the full
@@ -699,12 +907,12 @@ class AQPSession:
             # ColumnFormatSamplingRelation). ``rebuild=True`` forces a
             # re-sample after base-table mutation.
             sample = self.spark.read.parquet(path)
-            _SAMPLE_CACHE[key] = sample
+            set_sample(spec, self._token, sample)
             # bounds from the ATTACHED rows, not the base (the base scan is
             # exactly what attach avoids); the 2x headroom in measure_bound
             # absorbs sample-vs-population max gaps
             self._derive_col_bounds(sample, spec)
-        else:
+        elif sample is None:
             base_df = self.tables[spec.base_table]
             sample = stratified_sample(base_df, spec)
             if path:
@@ -722,7 +930,7 @@ class AQPSession:
             elif materialize:
                 sample = sample.persist()
                 sample.count()
-            _SAMPLE_CACHE[key] = sample
+            set_sample(spec, self._token, sample)
         self.catalog.register(SampleInfo(name, spec, path))
         # the sample is a first-class queryable relation: plain SQL scans it
         # by name (reference `select * from $sampleTable`,
@@ -781,7 +989,7 @@ class AQPSession:
     def drop_sample_table(self, name: str) -> None:
         info = self.catalog.get(name)
         if info:
-            _SAMPLE_CACHE.pop((info.spec, self._token), None)
+            set_sample(info.spec, self._token, None)
         self.catalog.drop(name)
         self.spark.catalog.dropTempView(name)
 
@@ -844,7 +1052,7 @@ class AQPSession:
         if missing:
             raise ValueError(f"not a sample relation: missing hidden "
                              f"column(s) {missing}")
-        _SAMPLE_CACHE[(spec, self._token)] = df
+        set_sample(spec, self._token, df)
         self.catalog.register(SampleInfo(name, spec, None))
         df.createOrReplaceTempView(name)
         self._derive_col_bounds(df, spec)
@@ -979,286 +1187,231 @@ class AQPSession:
             stratified_sample(self.tables[n], info.spec) \
                 .createOrReplaceTempView(info.name)
 
-    def sql(self, text: str) -> DataFrame:
-        mexp = re.match(r"^\s*EXPLAIN\s+AQP\s+(?P<q>.*)$", text,
-                        re.IGNORECASE | re.DOTALL)
-        if mexp:
-            # routing introspection as a one-row relation (the rebuild's
-            # SQL-surface analog of the reference's AQPInfo test hook,
-            # common/AQPInfoStoreTestHook.scala): which sample, which
-            # estimator, which behavior — without executing anything
-            an = self.analyze_sql(mexp.group("q"))
-            if an is None:
-                row = ("exact", None, None, None, None, None, None,
-                       "no WITH clause")
-            elif an.spec is None:
-                from .operators.closedform import ErrorLimitExceededException
-                try:
-                    hinfo = self._hll_route_info(mexp.group("q"))
-                except ErrorLimitExceededException as exc:
-                    # introspection must REPORT the strict outcome, never
-                    # raise it — executing the query is what raises
-                    return self.spark.createDataFrame(
-                        [("strict_throw", None, None, None,
-                          "hll_count_distinct", "strict", None, str(exc))],
-                        "route string, base_table string, qcs string, "
-                        "sample_method string, estimator string, "
-                        "behavior string, error double, reason string")
-                qinfo = self._hq_route_info(mexp.group("q"))
-                if hinfo is not None:
-                    from .stats import normal_ppf
-                    import math as _math
-                    rel = (normal_ppf((1 + hinfo["confidence"]) / 2)
-                           * 1.04 / _math.sqrt(1 << hinfo["p"]))
-                    row = ("approx", hinfo["table"],
-                           ",".join(hinfo["group_keys"]),
-                           f"hll(p={hinfo['p']})", "hll_count_distinct",
-                           self.defaults["behavior"], float(rel), None)
-                elif qinfo is not None:
-                    row = ("approx", qinfo["table"],
-                           ",".join(qinfo["group_keys"]),
-                           f"histogram(width={qinfo['width']})",
-                           "histogram_quantile",
-                           self.defaults["behavior"],
-                           float(qinfo["width"]) / 2.0, None)
-                else:
-                    row = ("exact", None, None, None, None, None, None,
-                           an.reason or "unsupported aggregate shape")
-            else:
-                s = an.spec
-                row = ("approx", s.sample.base_table,
-                       ",".join(s.sample.qcs), s.sample.method,
-                       s.estimator, s.behavior, float(s.error), None)
-            return self.spark.createDataFrame(
-                [row], "route string, base_table string, qcs string, "
-                       "sample_method string, estimator string, "
-                       "behavior string, error double, reason string")
-        sprop = fe.parse_set_aqp(text)
-        if sprop:
-            self._set_aqp_property(*sprop)
-            return self.spark.range(0)
-        show = fe.parse_show_aqp(text)
-        if show == "sample":
-            return self.list_sample_tables()
-        if show == "topk":
-            return self.list_topk_tables()
-        scmd = fe.parse_streaming_cmd(text)
-        if scmd:
-            op, dur = scmd
-            if op == "init":
-                self.streaming.init(dur)
-            elif op == "start":
-                self.streaming.start()
-            else:
-                self.streaming.stop()
-            return self.spark.range(0)
-        stream_ddl = fe.parse_create_stream(text)
-        if stream_ddl:
-            from .streaming.stream_tables import StreamTableDef
-            name, schema, provider, opts = stream_ddl
-            empty = self.streaming.create(
-                StreamTableDef(name, schema, provider, opts))
-            # the stream table doubles as a (initially empty) base relation
-            # so CREATE SAMPLE/TOPK TABLE ... ON <stream> works before any
-            # data; a default sink keeps the session's view of it current
-            self.tables[name.lower()] = empty
-            self.streaming.add_sink(
-                name, lambda bdf, n=name: self._on_stream_batch(n, bdf))
-            return self.spark.range(0)
-        dropt = fe.parse_drop_table(text)
-        if dropt:
-            name, if_exists = dropt
-            n = name.lower()
-            if self.streaming.tables.get(n) is not None:
-                self.streaming.drop(name)
-                self.tables.pop(n, None)
-                return self.spark.range(0)
-            if n in self.topk.tables:
-                self.topk.drop(n)
-                return self.spark.range(0)
-            if self.catalog.get(n) is not None:
-                # reference parity: samples drop with plain DROP TABLE
-                # (NYC demo scripts, create_and_load_NYCTaxiSample_*.sql)
-                self.drop_sample_table(n)
-                return self.spark.range(0)
-            if n in self._view_backed:
-                # session-registered relation (temp-view backed):
-                # unregister + invalidate samples built over it
-                invalidate_base_table(n, token=self._token)
-                self.tables.pop(n, None)
-                self._view_backed.discard(n)
-                self.spark.catalog.dropTempView(name)
-                return self.spark.range(0)
-            if if_exists and not self.spark.catalog.tableExists(name):
-                return self.spark.range(0)     # nothing to drop, no error
-            if n in self.tables:
-                # registered catalog-table base: a cached sample over the
-                # dropped data must not survive into a same-named recreate
-                invalidate_base_table(n, token=self._token)
-            self.tables.pop(n, None)
-            return self.spark.sql(text)       # regular Spark table/view
-        target = fe.parse_mutation_target(text)
-        if target:
-            t = target.lower()
-            if self.catalog.get(t) is not None or t in self.topk.tables:
-                raise fe.SQLFrontendError(
-                    f"mutations must target base tables, not the AQP-managed "
-                    f"structure '{target}' (drop and recreate it instead)")
-            # stale-cache guard: cached samples/plans over the mutated base
-            # are dropped BEFORE the mutation runs, so the next approx
-            # query re-samples the post-mutation data (scoped to this
-            # session's data token)
-            invalidate_base_table(t, token=self._token)
-            res = self.spark.sql(text)
-            if t in self.tables and self.spark.catalog.tableExists(t):
-                # catalog-table base (register_catalog_table): the stored
-                # DataFrame pinned the pre-mutation file index — refresh
-                # and re-resolve so the next re-sample sees the new rows
-                self.spark.catalog.refreshTable(t)
-                self.tables[t] = self.spark.table(t)
-            return res
-        ddl = fe.parse_create_sample(text)
-        if ddl:
-            name, base, opts, as_sql = ddl
-            # path: persist to / attach from parquet (skip the base rescan
-            # when the directory already holds the deterministic sample);
-            # rebuild 'true' forces a re-sample
-            return self.create_sample_table_from_spec(
-                name, spec_from_ddl(base, opts, as_sql=as_sql),
-                path=opts.get("path"),
-                rebuild=opts.get("rebuild", "").lower() == "true")
-        topk_ddl = fe.parse_create_topk(text)
-        if topk_ddl:
-            name, base, opts = topk_ddl
-            # same '500ms'/'60s'/bare-ms convention as the sample DDL
-            # (_interval_us; TopKWrapper.scala parses with parseTimeInterval)
-            iv_us = _interval_us(opts.get("timeinterval", "5000ms"))
-            kw = {}
-            # reference TopKWrapper options epoch / basetable concurrency
-            # analogs (TopKWrapper.scala:31-155): epoch pins the bucket
-            # origin (else min(time) is scanned at create time)
-            if "epoch" in opts:
-                kw["epoch_us"] = int(opts["epoch"])
-            if "numpartitions" in opts:
-                kw["num_partitions"] = int(opts["numpartitions"])
-            if "capacity" in opts:
-                kw["capacity"] = int(opts["capacity"])
-            # automatic Hokusai aging: keep the newest N buckets at full
-            # width, compress older ones on every ingest pass
-            if "decayhorizon" in opts:
-                kw["decay_horizon"] = int(opts["decayhorizon"])
-            if "decaylevels" in opts:
-                kw["decay_levels"] = int(opts["decaylevels"])
-            self.create_approx_ts_topk(
-                name, base, key=opts["key"],
-                time_series_column=opts.get("timeseriescolumn"),
-                time_interval_us=iv_us,
-                size=int(opts.get("size", "100")),
-                depth=int(opts.get("depth", "7")),
-                width=int(opts.get("width", "4096")),
-                frequency_col=opts.get("frequencycol"),
-                stream_summary=opts.get("streamsummary", "").lower() == "true",
-                int_key=opts.get("intkey", "").lower() == "true", **kw)
-            # TopK over a stream table: fan every micro-batch into the
-            # sketch (aqpTablePopulator, SnappyContextAQPFunctions
-            # .scala:390-442)
-            if (hasattr(self, "_streaming")
-                    and base.lower() in self.streaming.tables):
-                self.streaming.add_sink(
-                    base, lambda bdf, n=name: self.insert_into_topk(n, bdf))
-            return self.spark.range(0)
-        drop = fe.parse_drop_sample(text)
-        if drop:
-            self.drop_sample_table(drop)
-            return self.spark.range(0)
-        view_ddl = fe.parse_create_view(text)
-        if view_ddl:
-            name, body = view_ddl
-            # always a real Spark temp view (exact path is native); simple
-            # projection views additionally register for approx routing
-            self.spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW {name} "
-                           f"AS {body}")
-            try:
-                vparsed = fe.parse_select(body)
-                if fe.is_projection_view(vparsed):
-                    self.views[name.lower()] = vparsed
-            except fe.SQLFrontendError:
-                pass                         # exact-only view shape
-            return self.spark.range(0)
-        vdrop = fe.parse_drop_view(text)
-        if vdrop:
-            self.spark.catalog.dropTempView(vdrop)
-            self.views.pop(vdrop.lower(), None)
-            return self.spark.range(0)
-        scan = fe.parse_topk_scan(text)
-        if scan and scan[0].lower() in self.topk.tables:
-            name, start_us, end_us, k = scan
-            return self.query_approx_ts_topk(name, start_us, end_us, k)
+    # -- statements: (parser, handler) pairs tried in order by sql(). A
+    # handler's None result is an empty relation; NotImplemented declines
+    # and the text falls through to the next pair -----------------------
 
+    def _do_explain(self, query: str, text: str) -> DataFrame:
+        # the route sql() runs as a one-row relation, not executed (SQL
+        # analog of the reference's common/AQPInfoStoreTestHook.scala)
+        return self.spark.createDataFrame([self.route(query).explain_row()],
+                                          Route.EXPLAIN_SCHEMA)
+
+    def _do_streaming(self, scmd, text: str) -> None:
+        op, dur = scmd
+        if op == "init":
+            self.streaming.init(dur)
+        elif op == "start":
+            self.streaming.start()
+        else:
+            self.streaming.stop()
+
+    def _do_create_stream(self, stream_ddl, text: str) -> None:
+        from .streaming.stream_tables import StreamTableDef
+        name, schema, provider, opts = stream_ddl
+        empty = self.streaming.create(
+            StreamTableDef(name, schema, provider, opts))
+        # the stream table doubles as a (initially empty) base relation
+        # so CREATE SAMPLE/TOPK TABLE ... ON <stream> works before any
+        # data; a default sink keeps the session's view of it current
+        self.tables[name.lower()] = empty
+        self.streaming.add_sink(
+            name, lambda bdf, n=name: self._on_stream_batch(n, bdf))
+
+    def _do_drop_table(self, dropt, text: str) -> DataFrame | None:
+        name, if_exists = dropt
+        n = name.lower()
+        if self.streaming.tables.get(n) is not None:
+            self.streaming.drop(name)
+            self.tables.pop(n, None)
+            return None
+        if n in self.topk.tables:
+            return self.topk.drop(n)
+        if self.catalog.get(n) is not None:
+            # reference parity: samples drop with plain DROP TABLE
+            # (NYC demo scripts, create_and_load_NYCTaxiSample_*.sql)
+            return self.drop_sample_table(n)
+        if n in self._view_backed:
+            # session-registered relation (temp-view backed):
+            # unregister + invalidate samples built over it
+            invalidate_base_table(n, token=self._token)
+            self.tables.pop(n, None)
+            self._view_backed.discard(n)
+            self.spark.catalog.dropTempView(name)
+            return None
+        if if_exists and not self.spark.catalog.tableExists(name):
+            return None                    # nothing to drop, no error
+        if n in self.tables:
+            # registered catalog-table base: a cached sample over the
+            # dropped data must not survive into a same-named recreate
+            invalidate_base_table(n, token=self._token)
+        self.tables.pop(n, None)
+        return self.spark.sql(text)       # regular Spark table/view
+
+    def _do_mutation(self, target: str, text: str) -> DataFrame:
+        t = target.lower()
+        if self.catalog.get(t) is not None or t in self.topk.tables:
+            raise fe.SQLFrontendError(
+                f"mutations must target base tables, not the AQP-managed "
+                f"structure '{target}' (drop and recreate it instead)")
+        # stale-cache guard: cached samples/plans over the mutated base
+        # are dropped BEFORE the mutation runs, so the next approx
+        # query re-samples the post-mutation data (scoped to this
+        # session's data token)
+        invalidate_base_table(t, token=self._token)
+        res = self.spark.sql(text)
+        if t in self.tables and self.spark.catalog.tableExists(t):
+            # catalog-table base (register_catalog_table): the stored
+            # DataFrame pinned the pre-mutation file index — refresh
+            # and re-resolve so the next re-sample sees the new rows
+            self.spark.catalog.refreshTable(t)
+            self.tables[t] = self.spark.table(t)
+        return res
+
+    def _do_create_sample(self, ddl, text: str) -> DataFrame:
+        name, base, opts, as_sql = ddl
+        # path: persist to / attach from parquet (skip the base rescan
+        # when the directory already holds the deterministic sample);
+        # rebuild 'true' forces a re-sample
+        return self.create_sample_table_from_spec(
+            name, spec_from_ddl(base, opts, as_sql=as_sql),
+            path=opts.get("path"),
+            rebuild=opts.get("rebuild", "").lower() == "true")
+
+    def _do_create_topk(self, topk_ddl, text: str) -> None:
+        name, base, opts = topk_ddl
+        # same '500ms'/'60s'/bare-ms convention as the sample DDL
+        # (_interval_us; TopKWrapper.scala parses with parseTimeInterval)
+        iv_us = _interval_us(opts.get("timeinterval", "5000ms"))
+        # reference TopKWrapper options epoch / basetable concurrency
+        # analogs (TopKWrapper.scala:31-155): epoch pins the bucket
+        # origin (else min(time) is scanned at create time); decay*:
+        # automatic Hokusai aging keeps the newest N buckets at full
+        # width and compresses older ones on every ingest pass
+        kw = {arg: int(opts[opt]) for opt, arg in (
+            ("epoch", "epoch_us"), ("numpartitions", "num_partitions"),
+            ("capacity", "capacity"), ("decayhorizon", "decay_horizon"),
+            ("decaylevels", "decay_levels")) if opt in opts}
+        self.create_approx_ts_topk(
+            name, base, key=opts["key"],
+            time_series_column=opts.get("timeseriescolumn"),
+            time_interval_us=iv_us,
+            size=int(opts.get("size", "100")),
+            depth=int(opts.get("depth", "7")),
+            width=int(opts.get("width", "4096")),
+            frequency_col=opts.get("frequencycol"),
+            stream_summary=opts.get("streamsummary", "").lower() == "true",
+            int_key=opts.get("intkey", "").lower() == "true", **kw)
+        # TopK over a stream table: fan every micro-batch into the
+        # sketch (aqpTablePopulator, SnappyContextAQPFunctions
+        # .scala:390-442)
+        if (hasattr(self, "_streaming")
+                and base.lower() in self.streaming.tables):
+            self.streaming.add_sink(
+                base, lambda bdf, n=name: self.insert_into_topk(n, bdf))
+
+    def _do_create_view(self, view_ddl, text: str) -> None:
+        name, body = view_ddl
+        # always a real Spark temp view (exact path is native); simple
+        # projection views additionally register for approx routing
+        self.spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW {name} "
+                       f"AS {body}")
+        try:
+            vparsed = fe.parse_select(body)
+            if fe.is_projection_view(vparsed):
+                self.views[name.lower()] = vparsed
+        except fe.SQLFrontendError:
+            pass                         # exact-only view shape
+
+    def _do_drop_view(self, name: str, text: str) -> None:
+        self.spark.catalog.dropTempView(name)
+        self.views.pop(name.lower(), None)
+
+    def _do_topk_scan(self, scan, text: str):
+        name, start_us, end_us, k = scan
+        if name.lower() not in self.topk.tables:
+            return NotImplemented        # not a TopK table: a query
+        return self.query_approx_ts_topk(name, start_us, end_us, k)
+
+    _STATEMENTS = (
+        (fe.parse_explain_aqp, _do_explain),
+        (fe.parse_set_aqp, lambda s, prop, _: s._set_aqp_property(*prop)),
+        (fe.parse_show_aqp, lambda s, show, _: (
+            s.list_sample_tables() if show == "sample"
+            else s.list_topk_tables())),
+        (fe.parse_streaming_cmd, _do_streaming),
+        (fe.parse_create_stream, _do_create_stream),
+        (fe.parse_drop_table, _do_drop_table),
+        (fe.parse_mutation_target, _do_mutation),
+        (fe.parse_create_sample, _do_create_sample),
+        (fe.parse_create_topk, _do_create_topk),
+        (fe.parse_drop_sample, lambda s, name, _: s.drop_sample_table(name)),
+        (fe.parse_create_view, _do_create_view),
+        (fe.parse_drop_view, _do_drop_view),
+        (fe.parse_topk_scan, _do_topk_scan),
+    )
+
+    def sql(self, text: str) -> DataFrame:
+        for parse, handle in self._STATEMENTS:
+            parsed = parse(text)
+            if parsed:
+                out = handle(self, parsed, text)
+                if out is not NotImplemented:
+                    return self.spark.range(0) if out is None else out
+        return self.route(text).run(self)
+
+    def route(self, text: str) -> "Route":
+        """The routing decision for a query text: ``sql(text)`` runs it and
+        ``EXPLAIN AQP text`` prints it. Building it runs no Spark job (the
+        HLL route's key-type probe only analyzes)."""
         analyzed = self.analyze_sql(text)
         if analyzed is None:
-            # plain pass-through — but error functions are valid SQL in the
-            # reference EVERYWHERE, including base-table queries with no
-            # WITH clause (its perf corpus perfQueriesPartialRouteBaseTable
-            # .sql calls absolute_error on the base table): on any exact
-            # plan they fold to 0/NULL (QueryRoutingRules.scala:370-404)
-            if fe._ERRFN_CALL_RE.search(text):
-                return self.spark.sql(fe.fold_error_functions(text, None))
-            return self.spark.sql(text)
-        if analyzed.spec is None:
-            hll = self._try_hll_count_distinct(text)
-            if hll is not None:
-                return hll
-            hq = self._try_histogram_quantile(text)
-            if hq is not None:
-                return hq
-            derived = self._try_approx_derived(text)
-            if derived is not None:
-                return derived
-            stripped, _ = fe.strip_with_clause(text)
-            return self.spark.sql(fe.fold_error_functions(stripped, analyzed.parsed))
+            return Route("exact", reason="no WITH clause", text=text)
+        if analyzed.spec is not None:
+            return Route("approx", analyzed=analyzed,
+                         **_sample_fields(analyzed.spec))
+        return (self._sketch_route(text) or self._derived_route(text)
+                or Route("exact", reason=(analyzed.reason
+                                          or "unsupported aggregate shape"),
+                         text=fe.strip_with_clause(text)[0],
+                         analyzed=analyzed))
+
+    def _run_analyzed(self, analyzed) -> DataFrame:
         df = run_approx_query(self.spark, analyzed.spec, self.tables,
                               cache_token=self._token)
         if analyzed.rename:
             df = df.withColumnsRenamed(analyzed.rename)
         return df
 
-    def _try_approx_derived(self, text: str) -> DataFrame | None:
+    def _derived_route(self, text: str) -> "Route | None":
         """Sample query in a FROM-clause subquery joined by an exact outer
         query (CommonBugTest AQP-224/AQP-247/AQP-231/AQP-233): when the
         whole-query analysis could not route (e.g. the derived table
-        aggregates, so it cannot inline as a projection view), try routing
-        the SUBQUERY through its own sample — it inherits the outer WITH
+        aggregates, so it cannot inline as a projection view), route the
+        SUBQUERY through its own sample — it inherits the outer WITH
         clause (subqueryChildHandler semantics) and materializes as a
-        temp view of weighted estimates; the outer query then runs exact
-        over the join, its error functions constant-folded."""
+        temp view of weighted estimates at run time; the outer query then
+        runs exact over the join, its error functions constant-folded."""
         stripped, wc = fe.strip_with_clause(text)
         if wc is None:
             return None
         spans = fe.find_derived_spans(stripped)
         if not spans:
             return None
-        suffix = " WITH ERROR"
-        if wc.error is not None:
-            suffix += f" {wc.error!r}"
-        if wc.confidence is not None:
-            suffix += f" CONFIDENCE {wc.confidence!r}"
-        if wc.behavior is not None:
-            suffix += f" BEHAVIOR '{wc.behavior}'"
+        suffix = _with_clause_sql(wc.error, wc.confidence, wc.behavior)
         outer_rest = stripped
         for start, end, _i, _a in reversed(spans):
             outer_rest = outer_rest[:start] + outer_rest[end:]
-        routed_aggs: set[str] = set()
-        views: list[str] = []
-        outer = stripped
+        parts = []
         # right-to-left so earlier spans' offsets stay valid after splicing
         for start, end, inner_sql, alias in reversed(spans):
             try:
                 inner_parsed = fe.parse_select(inner_sql)
             except fe.SQLFrontendError:
                 continue                   # leave the span inline (exact)
-            inner_aggs = {a.lower() for e, a in inner_parsed.select_items
-                          if a and fe._AGG_RE.match(e.strip())}
+            inner_aggs = frozenset(
+                a.lower() for e, a in inner_parsed.select_items
+                if a and fe._AGG_RE.match(e.strip()))
             # error functions in the OUTER text that target an inner
             # aggregate alias resolve through the subquery (GetErrorBounds
             # parity): the inner query computes them, the outer references
@@ -1276,40 +1429,13 @@ class AQPSession:
                 inner = self.analyze_sql(inner_exec + suffix)
             except fe.SQLFrontendError:
                 continue
-            if inner is None or inner.spec is None:
-                continue
-            inner_df = run_approx_query(self.spark, inner.spec, self.tables,
-                                        cache_token=self._token)
-            if inner.rename:
-                inner_df = inner_df.withColumnsRenamed(inner.rename)
-            view = f"__aqp_derived_{uuid.uuid4().hex[:8]}"
-            inner_df.createOrReplaceTempView(view)
-            views.append(view)
-            routed_aggs |= inner_aggs
-            outer = (outer[:start] + view
-                     + (f" {alias}" if alias else "") + outer[end:])
-        if not views:
+            if inner is not None and inner.spec is not None:
+                parts.append((start, end, alias, inner, inner_aggs))
+        if not parts:
             return None
-
-        def err_repl(m: re.Match) -> str:
-            f, t = m.group(1).lower(), m.group(2)
-            if t.lower() in routed_aggs:
-                return f"{t}_{f}"
-            return m.group(0)
-
-        outer = fe._ERRFN_CALL_RE.sub(err_repl, outer)
-        try:
-            out = self.spark.sql(fe.fold_error_functions(outer, None))
-        finally:
-            # spark.sql resolves the views into the returned plan eagerly;
-            # dropping them immediately avoids leaking one temp view per
-            # derived query over a long session
-            for view in views:
-                self.spark.catalog.dropTempView(view)
-        return out
-
-    _CD_AGG_RE = re.compile(r"^COUNT\s*\(\s*DISTINCT\s+(?P<arg>.+)\)$",
-                            re.IGNORECASE | re.DOTALL)
+        return Route("derived", reason="FROM-subquery approx, outer exact",
+                     text=stripped, derived=tuple(parts),
+                     **_sample_fields(parts[-1][3].spec))
 
     _UTC_TZ = frozenset(("UTC", "Etc/UTC", "GMT", "Etc/GMT", "Z",
                          "+00:00", "Greenwich", "Universal", "Zulu"))
@@ -1358,259 +1484,74 @@ class AQPSession:
             return dt
         return "string"
 
-    def _hll_route_info(self, text: str) -> dict | None:
-        """Shape check for the opt-in HLL COUNT(DISTINCT) route (extension
-        beyond the reference, which routes COUNT(DISTINCT) exact —
-        common/QueryRoutingRules.scala:55-92). Routable iff
-        ``spark.sql.aqp.hllCountDistinct`` is on AND the query is
-        ``SELECT [keys,] COUNT(DISTINCT col) [, error fns] FROM one_table
-        [WHERE ..] [GROUP BY keys] [ORDER BY ..] [LIMIT n] WITH ERROR
-        ..`` — exactly one COUNT(DISTINCT), no joins/HAVING, every group
-        key selected. Anything else falls through to the reference-parity
-        exact route. Returns the builder kwargs or None."""
-        if not self.defaults.get("hll_count_distinct"):
+    def _sketch_route(self, text: str) -> "Route | None":
+        """The opt-in sketch routes (extensions beyond the reference, which
+        routes COUNT(DISTINCT) exact — common/QueryRoutingRules.scala:55-92
+        — and approximates only SUM/AVG/COUNT). With
+        ``spark.sql.aqp.hllCountDistinct`` on, ``SELECT [keys,]
+        COUNT(DISTINCT col) [, error fns] FROM one_table [WHERE ..] [GROUP
+        BY keys] [ORDER BY ..] [LIMIT n] WITH ERROR ..`` runs on the HLL
+        register lattice; with ``spark.sql.aqp.histogramQuantile`` on, the
+        same shape with aliased ``APPROX_PERCENTILE(col, q)`` items of one
+        column runs on the mergeable histogram. Any other shape returns
+        None and the exact route answers (where Spark's native
+        approx_percentile still answers, without bounds)."""
+        routes = [r for r in self._SKETCH_ROUTES if self.defaults.get(r[0])]
+        if not routes:
             return None
         try:
             stripped, wc = fe.strip_with_clause(text)
+            parsed = fe.parse_select(stripped) if wc is not None else None
         except fe.SQLFrontendError:
             return None
-        if wc is None:
+        if parsed is None or parsed.joins or parsed.having:
             return None
-        try:
-            parsed = fe.parse_select(stripped)
-        except fe.SQLFrontendError:
-            return None
-        if parsed.joins or parsed.having:
-            return None
-        table = parsed.from_table
-        quals = {q.lower() for q in (parsed.from_alias, table) if q}
+        for _, agg_re, agg_fields, hac_rule in routes:
+            kw = _sketch_shape(parsed, agg_re, agg_fields)
+            if kw is not None:
+                return hac_rule(self, kw, wc)
+        return None
 
-        def dq(s):
-            return fe._strip_qualifiers(s, quals)
-
-        def norm(s: str) -> str:
-            return re.sub(r"\s+", " ", s.strip()).lower()
-
-        gkeys = [dq(g).strip() for g in parsed.group_by]
-        # expression group keys route too: the builder pre-projects them
-        # to generated plain columns before the lattice stages (the same
-        # trick the main rewrite uses for expression QCS), so the only
-        # requirements are balanced text and an output alias when the
-        # selected key is not a plain column
-        if any(not fe._balanced(g) for g in gkeys):
-            return None
-        gset = {norm(g) for g in gkeys}
-        cd_arg = cd_alias = cd_text = None
-        err_raw: list[tuple[str, str, str | None]] = []
-        sel_keys: list[str] = []
-        sel_outs: list[str] = []
-        for expr, alias in parsed.select_items:
-            e = dq(expr).strip()
-            m = self._CD_AGG_RE.match(e)
-            if m and fe._balanced(m.group("arg")):
-                if cd_arg is not None:
-                    return None           # one sketch per query
-                cd_arg, cd_alias, cd_text = m.group("arg").strip(), alias, e
-                continue
-            if norm(e) in gset:
-                if alias is None and not re.fullmatch(r"\w+", e):
-                    return None       # expression key needs an output name
-                out = alias or e
-                if any(norm(out) == norm(o) for o in sel_outs):
-                    return None
-                sel_keys.append(e)
-                sel_outs.append(out)
-                continue
-            me = fe._ERRFN_RE.match(e)
-            if me:
-                err_raw.append((me.group(1).lower(),
-                                dq(me.group(2)).strip(), alias))
-                continue
-            return None
-        if cd_arg is None or gset != {norm(k) for k in sel_keys}:
-            return None
-        out_alias = cd_alias or "approx_count_distinct"
-        err_cols: list[tuple[str, str]] = []
-        for fn, target, alias in err_raw:
-            t = norm(target)
-            if t != norm(out_alias) and t != norm(cd_text):
-                return None               # errfn targets something else
-            out = alias or fn
-            if any(o == out for _, o in err_cols):
-                return None
-            err_cols.append((fn, out))
-        # duplicate names across ALL outputs (keys x estimate x errfns)
-        # would generate an ambiguous final SELECT — fall through to the
-        # exact route instead of raising (round-8 ADVICE)
-        outs_all = ([norm(o) for o in sel_outs] + [norm(out_alias)]
-                    + [norm(o) for _, o in err_cols])
-        if len(set(outs_all)) != len(outs_all):
-            return None
-        legal = ({norm(k) for k in sel_outs} | {norm(out_alias)}
-                 | {norm(o) for _, o in err_cols})
-        order = []
-        for o in parsed.order_by:
-            oo = dq(o).strip()
-            base = re.sub(r"\s+(ASC|DESC)\s*$", "", oo, flags=re.IGNORECASE)
-            if norm(base) not in legal:
-                return None
-            order.append(oo)
-        conf = (wc.confidence if wc.confidence is not None
-                else self.defaults["confidence"])
-        p = self.defaults["hll_p"]
+    def _hll_route(self, kw: dict, wc) -> "Route | None":
         # the key-type gate must precede the HAC contract check: a query
         # the gate sends to the exact route anyway (float/double key)
         # must never raise under behavior='strict' — the exact route's
         # error is 0, which satisfies any contract (round-10 review)
-        kind = self._hll_key_kind(cd_arg, table)
+        kind = self._hll_key_kind(kw["col"], kw["table"])
         if kind is None:
             return None         # float/double key: not replayable (probe
             # docstring) — the exact route answers, reference-parity
         # HAC contract (SampleTablePlan behaviors, reference
         # QueryProcessingRules.scala:50): the sketch's relative error is
         # known A PRIORI (z * 1.04/sqrt(m)), so the error contract
-        # resolves at PLAN time — strict raises, the reroute behaviors
+        # resolves at PLAN time — strict throws, the reroute behaviors
         # fall through to the exact route (which IS the full-table
         # answer), do_nothing/local_omit proceed on the sketch
-        import math as _math
-        from .stats import normal_ppf as _ppf
-        rel = _ppf((1.0 + conf) / 2.0) * 1.04 / _math.sqrt(1 << p)
+        import math
+        from .stats import normal_ppf
+        conf = (wc.confidence if wc.confidence is not None
+                else self.defaults["confidence"])
+        p = self.defaults["hll_p"]
+        rel = normal_ppf((1.0 + conf) / 2.0) * 1.04 / math.sqrt(1 << p)
         err = wc.error if wc.error is not None else self.defaults["error"]
         beh = wc.behavior or self.defaults["behavior"]
         if err is not None and 0 < err < rel:
             if beh == "strict":
-                from .operators.closedform import ErrorLimitExceededException
-                raise ErrorLimitExceededException(
-                    f"hll route relative error {rel:.4f} exceeds contract "
-                    f"{err} (behavior=strict; raise hllPrecision or the "
-                    f"error bound)")
+                return Route(
+                    "strict_throw", estimator="hll_count_distinct",
+                    behavior="strict",
+                    reason=(f"hll route relative error {rel:.4f} exceeds "
+                            f"contract {err} (behavior=strict; raise "
+                            f"hllPrecision or the error bound)"))
             if beh in ("run_on_full_table", "partial_routing"):
                 return None              # exact route = full-table answer
-        return {"col": cd_arg, "table": table, "p": p,
-                "where": dq(parsed.where), "group_keys": tuple(sel_keys),
-                "group_out": tuple(sel_outs),
-                "alias": out_alias, "err_cols": tuple(err_cols),
-                "confidence": conf, "order_by": tuple(order),
-                "limit": parsed.limit, "key_kind": kind}
-
-    def _try_hll_count_distinct(self, text: str) -> DataFrame | None:
-        info = self._hll_route_info(text)
-        if info is None:
-            return None
-        from .dialect import SPARK
         from .pipeline.distinct import hll_count_distinct_query_sql
-        return self.spark.sql(hll_count_distinct_query_sql(SPARK, **info))
+        return Route("hll", kw["table"], ",".join(kw["group_keys"]),
+                     f"hll(p={p})", "hll_count_distinct", beh, float(rel),
+                     build=hll_count_distinct_query_sql,
+                     sketch=dict(kw, p=p, confidence=conf, key_kind=kind))
 
-    _PCT_AGG_RE = re.compile(
-        r"^(?:APPROX_PERCENTILE|PERCENTILE_APPROX)\s*\(\s*(?P<col>\w+)\s*,"
-        r"\s*(?P<q>[0-9]*\.?[0-9]+)\s*\)$", re.IGNORECASE)
-
-    def _hq_route_info(self, text: str) -> dict | None:
-        """Shape check for the opt-in histogram-quantile route (extension —
-        the reference approximates only SUM/AVG/COUNT). Routable iff
-        ``spark.sql.aqp.histogramQuantile`` is on AND the query is
-        ``SELECT [keys,] APPROX_PERCENTILE(col, q) AS a [, more
-        percentiles of the SAME col] [, error fns] FROM one_table
-        [WHERE ..] [GROUP BY keys] WITH ERROR ..`` — every percentile
-        item aliased, no joins/HAVING. Returns builder kwargs or None
-        (fall through to the exact route, where Spark's native
-        approx_percentile still answers, just without bounds)."""
-        if not self.defaults.get("hist_quantile"):
-            return None
-        try:
-            stripped, wc = fe.strip_with_clause(text)
-        except fe.SQLFrontendError:
-            return None
-        if wc is None:
-            return None
-        try:
-            parsed = fe.parse_select(stripped)
-        except fe.SQLFrontendError:
-            return None
-        if parsed.joins or parsed.having:
-            return None
-        table = parsed.from_table
-        quals = {q.lower() for q in (parsed.from_alias, table) if q}
-
-        def dq(s):
-            return fe._strip_qualifiers(s, quals)
-
-        def norm(s: str) -> str:
-            return re.sub(r"\s+", " ", s.strip()).lower()
-
-        gkeys = [dq(g).strip() for g in parsed.group_by]
-        # expression keys route like the HLL route: the builder
-        # pre-projects them to generated plain columns
-        if any(not fe._balanced(g) for g in gkeys):
-            return None
-        gset = {norm(g) for g in gkeys}
-        col = None
-        pcts: list[tuple[float, str]] = []       # (q, out_alias)
-        by_target: dict[str, float] = {}         # norm(alias|text) -> q
-        err_raw: list[tuple[str, str, str | None]] = []
-        sel_keys: list[str] = []
-        sel_outs: list[str] = []
-        for expr, alias in parsed.select_items:
-            e = dq(expr).strip()
-            m = self._PCT_AGG_RE.match(e)
-            if m:
-                if alias is None:                # unaliased estimate column
-                    return None
-                c, q = m.group("col"), float(m.group("q"))
-                if not 0.0 < q < 1.0:
-                    return None
-                if col is not None and c.lower() != col.lower():
-                    return None                  # one histogram per query
-                if any(a == alias for _, a in pcts):
-                    return None                  # duplicate output alias
-                col = col or c
-                pcts.append((q, alias))
-                by_target[norm(alias)] = q
-                by_target[norm(e)] = q
-                continue
-            if norm(e) in gset:
-                if alias is None and not re.fullmatch(r"\w+", e):
-                    return None       # expression key needs an output name
-                out = alias or e
-                if any(norm(out) == norm(o) for o in sel_outs):
-                    return None
-                sel_keys.append(e)
-                sel_outs.append(out)
-                continue
-            me = fe._ERRFN_RE.match(e)
-            if me:
-                err_raw.append((me.group(1).lower(),
-                                dq(me.group(2)).strip(), alias))
-                continue
-            return None
-        if col is None or gset != {norm(k) for k in sel_keys}:
-            return None
-        err_cols: list[tuple[str, float, str]] = []
-        for fn, target, alias in err_raw:
-            if norm(target) not in by_target:
-                return None
-            out = alias or fn
-            if any(o == out for _, _, o in err_cols):
-                return None
-            err_cols.append((fn, by_target[norm(target)], out))
-        # same ambiguous-output fall-through as the HLL route (round-8
-        # ADVICE): any name shared between keys, percentile aliases and
-        # errfn outputs routes exact instead of raising
-        outs_all = ([norm(o) for o in sel_outs]
-                    + [norm(a) for _, a in pcts]
-                    + [norm(o) for _, _, o in err_cols])
-        if len(set(outs_all)) != len(outs_all):
-            return None
-        legal = ({norm(k) for k in sel_outs}
-                 | {norm(a) for _, a in pcts}
-                 | {norm(o) for _, _, o in err_cols})
-        order = []
-        for o in parsed.order_by:
-            oo = dq(o).strip()
-            base = re.sub(r"\s+(ASC|DESC)\s*$", "", oo, flags=re.IGNORECASE)
-            if norm(base) not in legal:
-                return None
-            order.append(oo)
+    def _histogram_route(self, kw: dict, wc) -> "Route | None":
         # HAC contract: unlike the HLL route, the bin envelope's RELATIVE
         # error is data-dependent (width/2 over the estimate), so an
         # explicit error bound cannot be certified at plan time. Under a
@@ -1623,20 +1564,23 @@ class AQPSession:
         if wc.error is not None and beh in ("strict", "run_on_full_table",
                                             "partial_routing"):
             return None
-        return {"col": col, "table": table,
-                "width": self.defaults["hist_bin_width"],
-                "pcts": tuple(pcts), "err_cols": tuple(err_cols),
-                "where": dq(parsed.where), "group_keys": tuple(sel_keys),
-                "group_out": tuple(sel_outs),
-                "order_by": tuple(order), "limit": parsed.limit}
-
-    def _try_histogram_quantile(self, text: str) -> DataFrame | None:
-        info = self._hq_route_info(text)
-        if info is None:
-            return None
-        from .dialect import SPARK
         from .pipeline.quantiles import histogram_quantile_query_sql
-        return self.spark.sql(histogram_quantile_query_sql(SPARK, **info))
+        width = self.defaults["hist_bin_width"]
+        return Route("histogram", kw["table"], ",".join(kw["group_keys"]),
+                     f"histogram(width={width})", "histogram_quantile", beh,
+                     float(width) / 2.0, build=histogram_quantile_query_sql,
+                     sketch=dict(kw, width=width))
+
+    # (session property, aggregate matcher, aggregate fields, HAC rule)
+    _SKETCH_ROUTES = (
+        ("hll_count_distinct",
+         re.compile(r"^COUNT\s*\(\s*DISTINCT\s+(?P<arg>.+)\)$",
+                    re.IGNORECASE | re.DOTALL), _hll_fields, _hll_route),
+        ("hist_quantile",
+         re.compile(r"^(?:APPROX_PERCENTILE|PERCENTILE_APPROX)\s*\(\s*"
+                    r"(?P<col>\w+)\s*,\s*(?P<q>[0-9]*\.?[0-9]+)\s*\)$",
+                    re.IGNORECASE), _histogram_fields, _histogram_route),
+    )
 
     @staticmethod
     def _split_statements(script: str) -> list[str]:
@@ -1902,13 +1846,8 @@ class AQPDataFrame:
 
     def sql_text(self, error: float, confidence: float | None = None,
                  behavior: str | None = None) -> str:
-        sql = self.body_text()
-        sql += f" WITH ERROR {error!r}"
-        if confidence is not None:
-            sql += f" CONFIDENCE {confidence!r}"
-        if behavior is not None:
-            sql += f" BEHAVIOR '{behavior.lower()}'"
-        return sql
+        return self.body_text() + _with_clause_sql(error, confidence,
+                                                   behavior)
 
     def withError(self, error: float, confidence: float | None = None,
                   behavior: str | None = None) -> DataFrame:

@@ -262,7 +262,6 @@ def hex15_to_long(hex_sql: str, dialect: str) -> str:
 M61 = (1 << 61) - 1
 _AV_MUL1 = 0x6C8E9CF5            # odd 31-bit multipliers (measured
 _AV_MUL2 = 0x2545F491            # avalanche 0.46-0.55 with the shifts below)
-_POLY_B = 1000003                # string_poly fold base (odd, < 2^31)
 
 
 def xorshr(dialect: str, x: str, n: int) -> str:
@@ -320,8 +319,7 @@ def avalanche60_steps(dialect: str, key_sql: str) -> list[tuple[str, str]]:
 def to_bigint_key(dialect: str, expr: str, kind: str) -> str:
     """Portable BIGINT rendering of a hashable key expression, by type
     kind: 'bigint' (any integral/boolean), 'timestamp' / 'timestamp_ntz'
-    (epoch micros), 'date' (epoch days), 'string_poly' (opt-in
-    polynomial code-point fold — see inline note). Identical values on
+    (epoch micros), 'date' (epoch days). Identical values on
     Spark and DuckDB (NTZ goes through timestampdiff from the NTZ epoch —
     timezone-independent, matching DuckDB's naive epoch_us; same policy
     as topk.api._time_us).
@@ -340,29 +338,6 @@ def to_bigint_key(dialect: str, expr: str, kind: str) -> str:
     session timezone is UTC, and maps LTZ keys to 'string' otherwise."""
     if kind == "bigint":
         return f"CAST({expr} AS BIGINT)"
-    if kind == "string_poly":
-        # polynomial fold over the character code points in the Mersenne
-        # field: acc = (acc * B + c) mod (2^61-1), one O(len) lambda pass
-        # (list_reduce has no init on DuckDB — prepend the seed). The
-        # fold alone has structured low bits (the last character
-        # dominates), so it MUST feed the avalanche chain like every
-        # other integer kind — never the HLL lattice directly. Collision
-        # class: distinct strings collide with probability <= len/2^61
-        # (random polynomial root), vs md5's ~2^-60 — both negligible
-        # for sketch use. Round-10 A/B OUTCOME (PLANS.md): LOSES to md5
-        # decisively — 14x slower on Spark, 7x on DuckDB at 30M rows
-        # (per-char HOF lambda over the ~16x-expanded mulmod61 vs one
-        # native md5 intrinsic per row) — so the string default stays
-        # md5; this kind stays opt-in-only (never auto-probed) to keep
-        # the A/B (scripts/ab_string_hash.py) reproducible.
-        lam = f"((({mulmod61(dialect, 'a', _POLY_B)}) + b) % {M61})"
-        if dialect == SPARK:
-            return (f"aggregate(transform(split({expr}, ''), "
-                    f"c -> CAST(ascii(c) AS BIGINT)), CAST(0 AS BIGINT), "
-                    f"(a, b) -> {lam})")
-        return (f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
-                f"list_transform(string_split({expr}, ''), "
-                f"c -> CAST(ascii(c) AS BIGINT))), (a, b) -> {lam})")
     if kind == "timestamp":
         return (f"unix_micros({expr})" if dialect == SPARK
                 else f"epoch_us({expr})")

@@ -285,11 +285,9 @@ def invalidate_base_table(name: str, token: str | None = None) -> None:
     over different data would otherwise cross-invalidate)."""
     n = name.lower()
 
-    def tok_ok(k) -> bool:
-        return token is None or k[1] == token
-
     for key in [k for k in _SAMPLE_CACHE
-                if tok_ok(k) and k[0].base_table.lower() == n]:
+                if (token is None or k[1] == token)
+                and k[0].base_table.lower() == n]:
         _SAMPLE_CACHE.pop(key).unpersist()
 
     def touches(spec) -> bool:
@@ -302,14 +300,43 @@ def invalidate_base_table(name: str, token: str | None = None) -> None:
         return any(n in (t.lower() for t in sp.tables)
                    for sp in spec.where_subs)
 
-    for key in [k for k in _PLAN_CACHE if tok_ok(k) and touches(k[0])]:
-        _PLAN_CACHE.pop(key)
-    # the bootstrap form-pick memo caches the prepared sample's row count
-    # under the same (spec, token) key shape — a mutated base table could
-    # otherwise pin a stale size (wrong FORM, never wrong results: both
-    # forms are bit-identical)
-    for key in [k for k in _BS_ROWS_MEMO if tok_ok(k) and touches(k[0])]:
-        _BS_ROWS_MEMO.pop(key)
+    _evict_plans(token, touches)
+
+
+def _evict_plans(token: str | None, touches) -> None:
+    """Drop the prepared plans and bootstrap row-count memos whose query
+    spec ``touches``, scoped to one data token (None: every token). The
+    memo caches the prepared sample's row count under the same (spec,
+    token) key shape — a replaced sample could otherwise pin a stale size
+    (wrong FORM, never wrong results: both forms are bit-identical)."""
+    for cache in (_PLAN_CACHE, _BS_ROWS_MEMO):
+        for key in [k for k in cache
+                    if (token is None or k[1] == token) and touches(k[0])]:
+            cache.pop(key)
+
+
+def set_sample(sample, token: str, df: DataFrame | None) -> None:
+    """Install ``df`` as the cached sample for (sample spec, token), or
+    remove the entry when ``df`` is None. Plans and memos prepared over
+    the previous entry are evicted in the same step: a re-attach under the
+    same spec must never be served a plan over the old rows."""
+    def uses(spec) -> bool:
+        # WHERE-subquery trees read their own sample, and a scalar
+        # subquery's estimate is inlined into the outer plan
+        return spec.sample == sample or any(
+            sp.sample == sample or (sp.sub_spec is not None
+                                    and uses(sp.sub_spec))
+            for sp in spec.where_subs)
+
+    _evict_plans(token, uses)
+    if df is None:
+        _SAMPLE_CACHE.pop((sample, token), None)
+    else:
+        _SAMPLE_CACHE[(sample, token)] = df
+
+
+def cached_sample(sample, token: str) -> DataFrame | None:
+    return _SAMPLE_CACHE.get((sample, token))
 
 
 def get_sample(base: DataFrame, sample, cache_token: str | None) -> DataFrame:

@@ -978,6 +978,16 @@ def parse_drop_view(sql: str) -> str | None:
     return m.group("name") if m else None
 
 
+_EXPLAIN_AQP_RE = re.compile(r"^\s*EXPLAIN\s+AQP\s+(?P<q>.*)$",
+                             re.IGNORECASE | re.DOTALL)
+
+
+def parse_explain_aqp(sql: str) -> str | None:
+    """``EXPLAIN AQP <query>`` -> the query text."""
+    m = _EXPLAIN_AQP_RE.match(sql)
+    return m.group("q") if m else None
+
+
 def expand_view(parsed: ParsedSelect,
                 views: dict[str, ParsedSelect]) -> ParsedSelect:
     """Resolve a query over a registered projection view down to its base

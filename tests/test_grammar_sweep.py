@@ -16,7 +16,7 @@ import itertools
 
 import pytest
 
-from snappy_aqp_spark.api import AQPSession
+from snappy_aqp_spark.api import AQPSession, Route
 from snappy_aqp_spark.plans.approx_query import oracle_sql_for
 from tests.conftest import SF_SMALL, compare_frames
 
@@ -169,3 +169,68 @@ def test_grammar_smoke(sweep_aqp, duck, name, query):
     df = sweep_aqp.sql(query)
     oracle = duck.sql(oracle_sql_for(an.spec)).df().rename(columns=an.rename)
     compare_frames(df, oracle)
+
+
+# EXPLAIN AQP must describe the route sql() runs: the default sweep subset
+# plus the sketch, derived-subquery, strict and exact route shapes
+ROUTE_CASES = CASES[::8] + [
+    ("hll", "SELECT COUNT(DISTINCT o_custkey) AS a, absolute_error(a) AS e "
+            "FROM orders WITH ERROR"),
+    ("hll_grouped", "SELECT o_orderpriority, COUNT(DISTINCT o_custkey) AS a "
+                    "FROM orders GROUP BY o_orderpriority ORDER BY a "
+                    "WITH ERROR 0.3 BEHAVIOR 'local_omit'"),
+    ("hll_strict", "SELECT COUNT(DISTINCT o_custkey) AS a FROM orders "
+                   "WITH ERROR 0.01 BEHAVIOR 'strict'"),
+    ("histogram", "SELECT l_returnflag, APPROX_PERCENTILE(l_quantity, 0.5) "
+                  "AS med, upper_bound(med) AS ub FROM lineitem "
+                  "GROUP BY l_returnflag WITH ERROR BEHAVIOR 'local_omit'"),
+    ("derived", "SELECT o.o_orderstatus, count(*) AS c FROM (SELECT "
+                "l_orderkey, sum(l_extendedprice) AS rev FROM lineitem "
+                "GROUP BY l_orderkey) big JOIN orders o "
+                "ON big.l_orderkey = o.o_orderkey "
+                "GROUP BY o.o_orderstatus WITH ERROR 0.5"),
+    ("exact_plain", "SELECT count(*) AS c, absolute_error(c) FROM lineitem"),
+    ("exact_shape", "SELECT max(l_quantity) AS m FROM lineitem "
+                    "WITH ERROR 0.5"),
+]
+
+
+ROUTE_KINDS = {"hll": "hll", "hll_grouped": "hll",
+               "hll_strict": "strict_throw", "histogram": "histogram",
+               "derived": "derived", "exact_plain": "exact",
+               "exact_shape": "exact"}
+
+
+@pytest.fixture(scope="module")
+def route_aqp(sweep_aqp):
+    sweep_aqp.sql("SET spark.sql.aqp.hllCountDistinct=true")
+    sweep_aqp.sql("SET spark.sql.aqp.histogramQuantile=true")
+    yield sweep_aqp
+    sweep_aqp.sql("SET spark.sql.aqp.hllCountDistinct=false")
+    sweep_aqp.sql("SET spark.sql.aqp.histogramQuantile=false")
+
+
+@pytest.mark.parametrize("name,query", ROUTE_CASES,
+                         ids=[n for n, _ in ROUTE_CASES])
+def test_explain_reports_executed_route(route_aqp, monkeypatch, name,
+                                        query):
+    ran = []
+    monkeypatch.setattr(Route, "run", lambda self, aqp: ran.append(self))
+    route_aqp.sql(query)
+    (route,) = ran
+    assert route.kind == ROUTE_KINDS.get(name, route.kind)
+    row = route_aqp.sql("EXPLAIN AQP " + query).collect()[0]
+    assert tuple(row) == route.explain_row()
+    assert row["route"] == {"exact": "exact",
+                            "strict_throw": "strict_throw"}.get(
+                                route.kind, "approx")
+    if route.kind in ("approx", "derived"):
+        # the sample fields are those of the spec run_approx_query gets
+        an = route.analyzed if route.kind == "approx" else route.derived[-1][3]
+        s = an.spec
+        assert tuple(row)[1:7] == (
+            s.sample.base_table, ",".join(s.sample.qcs), s.sample.method,
+            s.estimator, s.behavior, s.error)
+    elif route.kind in ("hll", "histogram"):
+        assert row["base_table"] == route.sketch["table"]
+        assert row["qcs"] == ",".join(route.sketch["group_keys"])

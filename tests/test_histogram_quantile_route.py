@@ -65,6 +65,11 @@ def test_explain_aqp_reports_route(spark):
     assert row["estimator"] == "histogram_quantile"
     assert row["sample_method"] == "histogram(width=50)"
     assert row["error"] == 25.0
+    assert row["behavior"] == "do_nothing"
+    # the row reports the WITH clause's behavior, not the session default
+    row = aqp.sql("EXPLAIN AQP " + Q + " BEHAVIOR 'local_omit'").collect()[0]
+    assert row["estimator"] == "histogram_quantile"
+    assert row["behavior"] == "local_omit"
 
 
 def test_fixture_matches_duckdb_oracle(spark, duck):
@@ -89,7 +94,7 @@ def test_fixture_matches_duckdb_oracle(spark, duck):
 ])
 def test_unsupported_shapes_fall_through(spark, text):
     aqp = _session(spark, "hqfall")
-    assert aqp._hq_route_info(text) is None
+    assert aqp.route(text).kind == "exact"
 
 
 def test_hac_explicit_error_with_certifying_behavior_goes_exact(spark):
@@ -155,12 +160,12 @@ def test_expression_group_key_routes(spark):
                      behavior="do_nothing", data_token="hqexprkey")
     aqp.load_tables(SF_SMALL, ("documents",))
     aqp.sql("SET spark.sql.aqp.histogramQuantile=true")
-    info = aqp._hq_route_info(
+    route = aqp.route(
         "SELECT doc_id % 3 AS b, APPROX_PERCENTILE(n_chars, 0.5) AS med "
         "FROM documents GROUP BY doc_id % 3 WITH ERROR")
-    assert info is not None
-    assert info["group_keys"] == ("doc_id % 3",)
-    assert info["group_out"] == ("b",)
+    assert route.kind == "histogram"
+    assert route.sketch["group_keys"] == ("doc_id % 3",)
+    assert route.sketch["group_out"] == ("b",)
     rows = aqp.sql(
         "SELECT doc_id % 3 AS b, APPROX_PERCENTILE(n_chars, 0.5) AS med "
         "FROM documents GROUP BY doc_id % 3 ORDER BY b WITH ERROR"

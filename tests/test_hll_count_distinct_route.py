@@ -213,9 +213,9 @@ def test_float_keys_fall_through_to_exact(spark):
     assert aqp._hll_key_kind("l_quantity", "lineitem") is None  # double
     assert aqp._hll_key_kind("CAST(l_quantity AS DECIMAL(12,2))",
                              "lineitem") == "string"
-    assert aqp._hll_route_info(
+    assert aqp.route(
         "SELECT COUNT(DISTINCT l_quantity) AS a FROM lineitem "
-        "WITH ERROR") is None
+        "WITH ERROR").kind == "exact"
     exact = spark.sql(
         "SELECT COUNT(DISTINCT l_quantity) c FROM lineitem").collect()[0][0]
     row = aqp.sql("SELECT COUNT(DISTINCT l_quantity) AS a, "
@@ -265,6 +265,11 @@ def test_explain_aqp_reports_route(spark):
     assert row["estimator"] == "hll_count_distinct"
     assert row["sample_method"] == "hll(p=9)"
     assert row["base_table"] == "orders"
+    assert row["behavior"] == "do_nothing"
+    # the row reports the WITH clause's behavior, not the session default
+    row = aqp.sql("EXPLAIN AQP " + Q + " BEHAVIOR 'local_omit'").collect()[0]
+    assert row["estimator"] == "hll_count_distinct"
+    assert row["behavior"] == "local_omit"
     aqp.sql("SET spark.sql.aqp.hllCountDistinct=false")
     row = aqp.sql("EXPLAIN AQP " + Q).collect()[0]
     assert row["route"] == "exact"
@@ -293,7 +298,7 @@ def test_fixture_matches_duckdb_oracle(spark, duck):
 ])
 def test_unsupported_shapes_fall_through(spark, text):
     aqp = _session(spark, "hllfall")
-    assert aqp._hll_route_info(text) is None
+    assert aqp.route(text).kind == "exact"
     aqp.sql(text)                                # exact route still works
 
 
@@ -304,25 +309,25 @@ def test_output_name_collisions_fall_through(spark):
     exact route answers) instead of raising mid-plan."""
     aqp = _session(spark, "hllcollide")
     # key alias == estimate alias
-    assert aqp._hll_route_info(
+    assert aqp.route(
         "SELECT year(o_orderdate) AS approx_customers, "
         "COUNT(DISTINCT o_custkey) AS approx_customers "
-        "FROM orders GROUP BY year(o_orderdate) WITH ERROR") is None
+        "FROM orders GROUP BY year(o_orderdate) WITH ERROR").kind == "exact"
     # key alias == errfn output alias
-    assert aqp._hll_route_info(
+    assert aqp.route(
         "SELECT year(o_orderdate) AS lb, COUNT(DISTINCT o_custkey) AS a, "
         "lower_bound(a) AS lb FROM orders GROUP BY year(o_orderdate) "
-        "WITH ERROR") is None
+        "WITH ERROR").kind == "exact"
     # estimate alias == errfn output alias
-    assert aqp._hll_route_info(
+    assert aqp.route(
         "SELECT COUNT(DISTINCT o_custkey) AS a, lower_bound(a) AS a "
-        "FROM orders WITH ERROR") is None
+        "FROM orders WITH ERROR").kind == "exact"
     # same contract on the histogram route
     aqp.sql("SET spark.sql.aqp.histogramQuantile=true")
-    assert aqp._hq_route_info(
+    assert aqp.route(
         "SELECT year(o_orderdate) AS med, "
         "APPROX_PERCENTILE(o_totalprice, 0.5) AS med "
-        "FROM orders GROUP BY year(o_orderdate) WITH ERROR") is None
+        "FROM orders GROUP BY year(o_orderdate) WITH ERROR").kind == "exact"
 
 
 def test_no_with_clause_never_routes(spark):
@@ -387,12 +392,12 @@ def test_expression_group_key_routes(spark):
     lattice) — but only when the selected key carries an output alias;
     an unaliased expression key still falls through."""
     aqp = _session(spark, "hllexprkey")
-    info = aqp._hll_route_info(
+    route = aqp.route(
         "SELECT year(o_orderdate) AS y, COUNT(DISTINCT o_custkey) a "
         "FROM orders GROUP BY year(o_orderdate) WITH ERROR")
-    assert info is not None
-    assert info["group_keys"] == ("year(o_orderdate)",)
-    assert info["group_out"] == ("y",)
+    assert route.kind == "hll"
+    assert route.sketch["group_keys"] == ("year(o_orderdate)",)
+    assert route.sketch["group_out"] == ("y",)
     rows = aqp.sql(
         "SELECT year(o_orderdate) AS y, COUNT(DISTINCT o_custkey) AS a "
         "FROM orders GROUP BY year(o_orderdate) ORDER BY y WITH ERROR"
@@ -407,9 +412,9 @@ def test_expression_group_key_routes(spark):
     assert all(isinstance(r["a"], float) and r["a"] > 0 for r in rows)
     assert any(r["a"] != exact[r["y"]] for r in rows)
     # unaliased expression key: no output column name -> exact path
-    assert aqp._hll_route_info(
+    assert aqp.route(
         "SELECT year(o_orderdate), COUNT(DISTINCT o_custkey) a "
-        "FROM orders GROUP BY year(o_orderdate) WITH ERROR") is None
+        "FROM orders GROUP BY year(o_orderdate) WITH ERROR").kind == "exact"
 
 
 @pytest.mark.slow

@@ -523,26 +523,6 @@ def test_hll_linear_counting_small_range(views, duck):
         duck.sql("DROP VIEW IF EXISTS small_card")
 
 
-def test_hll_string_poly_key_kind_matches_oracle(views, duck):
-    """the opt-in 'string_poly' key kind (round-9 VERDICT #7 A/B
-    candidate for the md5 string path — scripts/ab_string_hash.py
-    measures the cost): the polynomial code-point fold + avalanche must
-    replay bit-exactly on DuckDB over REAL text (multi-byte characters,
-    punctuation, the same split/ascii semantics gram_int_array already
-    relies on), and estimate within the same HLL error envelope as the
-    md5 path."""
-    from snappy_aqp_spark.pipeline.distinct import (
-        hll_count_distinct_query_sql)
-    kw = dict(col="text", table="documents", p=9, alias="a",
-              key_kind="string_poly")
-    sp = views.sql(hll_count_distinct_query_sql(SPARK, **kw)).collect()[0][0]
-    dk = duck.sql(hll_count_distinct_query_sql(DUCKDB, **kw)).fetchone()[0]
-    assert sp == dk
-    exact = views.sql(
-        "SELECT COUNT(DISTINCT text) c FROM documents").collect()[0][0]
-    assert abs(sp - exact) / exact < 4 * 1.04 / (1 << 9) ** 0.5
-
-
 def test_hll_grouped(views, duck):
     from snappy_aqp_spark.pipeline.distinct import hll_distinct_stages
     stages, final = hll_distinct_stages(SPARK, p=6, group_by="lang",

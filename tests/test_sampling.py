@@ -261,8 +261,8 @@ def test_multi_sample_build_prefilter_and_fallback_branches(spark, tmp_path,
     the per-spec builder."""
     import pandas as pd
 
-    from snappy_aqp_spark import api as api_mod
     from snappy_aqp_spark.api import AQPSession
+    from snappy_aqp_spark.plans import approx_query as aq
     from snappy_aqp_spark.sampling import samplers as S
 
     df = spark.range(20000).selectExpr(
@@ -276,7 +276,7 @@ def test_multi_sample_build_prefilter_and_fallback_branches(spark, tmp_path,
                               ("fallback", 0)):
         monkeypatch.setattr(S, "_OVERSAMPLE", oversample)
         solo = stratified_sample(df, spec).toPandas()
-        api_mod._SAMPLE_CACHE.clear()
+        aq._SAMPLE_CACHE.clear()
         built = aqp.create_sample_tables(
             [("pf_s", spec)], str(tmp_path / f"pf_{label}"))
         multi = built["pf_s"].toPandas()

@@ -952,6 +952,12 @@ def test_approx_derived_aggregating_subquery_join(aqp, duck):
     sp = aqp.sql(q).toPandas()
     inner_an = aqp.analyze_sql(inner + " WITH ERROR 0.5")
     assert inner_an.spec is not None
+    # and EXPLAIN AQP reports that route with the subquery's sample
+    s = inner_an.spec
+    row = aqp.sql("EXPLAIN AQP " + q).collect()[0]
+    assert tuple(row)[:7] == (
+        "approx", s.sample.base_table, ",".join(s.sample.qcs),
+        s.sample.method, s.estimator, s.behavior, s.error)
     osql = ("WITH big AS (" + oracle_sql_for(inner_an.spec) + ") "
             "SELECT o.o_orderstatus, "
             "CAST(sum(CAST(ROUND(o.o_totalprice * 100) AS BIGINT)) AS BIGINT)"
@@ -1711,6 +1717,38 @@ def test_drop_table_invalidates_view_backed_relation(spark):
     c2 = s.sql(q).collect()[0]["c"]
     assert 4000 < c2 < 6000, (c1, c2)
     s.sql("DROP TABLE dropreg")
+
+
+@pytest.mark.parametrize("drop", [True, False], ids=["drop", "no_drop"])
+def test_reattach_same_spec_serves_new_rows(spark, drop):
+    """Sample rows re-attached under a spec that was already queried — with
+    or without a drop in between — must be what the next query reads: the
+    plan cached over the old rows goes with the old sample entry."""
+    from snappy_aqp_spark.sampling.samplers import stratified_sample
+    from snappy_aqp_spark.specs import SampleSpec
+    spec = SampleSpec("lineitem", ("l_orderkey", "l_linenumber"),
+                      ("l_returnflag",), "hash", 0.1, 50, 42)
+    q = ("SELECT l_returnflag, SUM(l_quantity) AS s FROM lineitem "
+         "GROUP BY l_returnflag ORDER BY l_returnflag WITH ERROR 0.5")
+
+    def session(token):
+        s = AQPSession(spark, data_token=token)
+        s.load_tables(SF_SMALL, ["lineitem"])
+        return s
+
+    s = session(f"reattach-{drop}")
+    li = s.tables["lineitem"]
+    rows_b = stratified_sample(li.where("l_orderkey % 2 = 1"), spec)
+    s.attach_sample_data(
+        "li_re", stratified_sample(li.where("l_orderkey % 2 = 0"), spec),
+        spec)
+    s.sql(q).collect()
+    if drop:
+        s.drop_sample_table("li_re")
+    s.attach_sample_data("li_re", rows_b, spec)
+    fresh = session(f"reattach-fresh-{drop}")
+    fresh.attach_sample_data("li_re", rows_b, spec)
+    assert s.sql(q).collect() == fresh.sql(q).collect()
 
 
 def test_show_sample_and_topk_tables(spark):
