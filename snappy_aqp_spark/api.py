@@ -914,8 +914,8 @@ class AQPSession:
             self._derive_col_bounds(sample, spec)
         elif sample is None:
             base_df = self.tables[spec.base_table]
-            sample = stratified_sample(base_df, spec)
             if path:
+                sample = stratified_sample(base_df, spec)
                 sample.write.mode("overwrite").parquet(path)
                 # self-describing persistence: spec + the creation-time
                 # column bounds ride with the data so attach_sample() can
@@ -928,8 +928,9 @@ class AQPSession:
                                 if c in cols})
                 sample = self.spark.read.parquet(path)
             elif materialize:
-                sample = sample.persist()
-                sample.count()
+                sample = get_sample(base_df, spec, self._token)
+            else:
+                sample = stratified_sample(base_df, spec)
             set_sample(spec, self._token, sample)
         self.catalog.register(SampleInfo(name, spec, path))
         # the sample is a first-class queryable relation: plain SQL scans it
@@ -1543,7 +1544,7 @@ class AQPSession:
                     reason=(f"hll route relative error {rel:.4f} exceeds "
                             f"contract {err} (behavior=strict; raise "
                             f"hllPrecision or the error bound)"))
-            if beh in ("run_on_full_table", "partial_routing"):
+            if beh in ("run_on_full_table", "partial_run_on_base_table"):
                 return None              # exact route = full-table answer
         from .pipeline.distinct import hll_count_distinct_query_sql
         return Route("hll", kw["table"], ",".join(kw["group_keys"]),
@@ -1556,13 +1557,13 @@ class AQPSession:
         # error is data-dependent (width/2 over the estimate), so an
         # explicit error bound cannot be certified at plan time. Under a
         # certifying/rerouting behavior (strict, run_on_full_table,
-        # partial_routing) an EXPLICIT error value therefore falls
+        # partial_run_on_base_table) an EXPLICIT error value therefore falls
         # through to the exact route — the user demanded a certified
         # bound, the exact answer is the only one that satisfies it.
         # do_nothing/local_omit (and bare WITH ERROR) stay on the sketch.
         beh = wc.behavior or self.defaults["behavior"]
         if wc.error is not None and beh in ("strict", "run_on_full_table",
-                                            "partial_routing"):
+                                            "partial_run_on_base_table"):
             return None
         from .pipeline.quantiles import histogram_quantile_query_sql
         width = self.defaults["hist_bin_width"]

@@ -246,9 +246,12 @@ def _select_frags(df: DataFrame, keep: list[str], frags: dict[str, str]) -> Data
 _SAMPLE_CACHE: dict[tuple, DataFrame] = {}
 
 # prepared-plan cache: the generated closed-form/bootstrap expression trees
-# are large, and profiling shows DataFrame construction + Catalyst analysis
-# dominates interactive query latency (~0.3 s build vs ~0.03 s execution at
-# sf0.1) — the reference caches analyzed AQP plans for the same reason
+# are large. Traced medians of the repository benchmark (perfbench
+# interactive_sql, ~5k-row samples, 4-core VM): a plan-cache miss spends
+# ~145 ms in AQPSession.sql building the DataFrame, a hit ~8 ms; Spark then
+# plans a hit in ~30 ms and executes it in ~190 ms (~470 ms, 5 jobs, before
+# samples of one-partition bases were kept as one partition; 1 job after).
+# The reference caches analyzed AQP plans for the same reason
 # (internal/SnappyAQPSessionState.scala AQPQueryAnalyzer re-entrancy cache).
 # Only side-effect-free behaviors are cacheable: strict / run_on_full_table /
 # partial_run_on_base_table run an eager violation check with a
@@ -317,9 +320,11 @@ def _evict_plans(token: str | None, touches) -> None:
 
 def set_sample(sample, token: str, df: DataFrame | None) -> None:
     """Install ``df`` as the cached sample for (sample spec, token), or
-    remove the entry when ``df`` is None. Plans and memos prepared over
-    the previous entry are evicted in the same step: a re-attach under the
-    same spec must never be served a plan over the old rows."""
+    remove the entry and free its blocks when ``df`` is None (Spark would
+    serve a rebuild's persist of the same plan from the old blocks). Plans
+    and memos prepared over the previous entry are evicted in the same
+    step: a re-attach under the same spec must never be served a plan over
+    the old rows."""
     def uses(spec) -> bool:
         # WHERE-subquery trees read their own sample, and a scalar
         # subquery's estimate is inlined into the outer plan
@@ -330,7 +335,9 @@ def set_sample(sample, token: str, df: DataFrame | None) -> None:
 
     _evict_plans(token, uses)
     if df is None:
-        _SAMPLE_CACHE.pop((sample, token), None)
+        old = _SAMPLE_CACHE.pop((sample, token), None)
+        if old is not None:
+            old.unpersist()
     else:
         _SAMPLE_CACHE[(sample, token)] = df
 
@@ -339,13 +346,33 @@ def cached_sample(sample, token: str) -> DataFrame | None:
     return _SAMPLE_CACHE.get((sample, token))
 
 
+def _one_partition(df: DataFrame) -> bool:
+    """True when Spark plans ``df`` as one partition. Only an exchange-free
+    plan is asked: building its RDD is file-split (or local-data) planning
+    and runs no Spark job, where an adaptive plan would run its stages."""
+    qe = df._jdf.queryExecution()
+    tree = qe.executedPlan().toString()
+    if "AdaptiveSparkPlan" in tree or "Exchange" in tree:
+        return False
+    return qe.toRdd().getNumPartitions() == 1
+
+
 def get_sample(base: DataFrame, sample, cache_token: str | None) -> DataFrame:
-    """materialized stratified sample for a SampleSpec (session-cached)."""
+    """materialized stratified sample for a SampleSpec (session-cached).
+
+    One partition in, one partition out: a sample is never larger than its
+    base, so when Spark reads the base as one partition the sample is
+    persisted as one. The cached relation then reports SinglePartition and
+    the queries over it plan no exchange (every stage of the shuffled plan
+    ran as one task anyway). Answers do not depend on the partitioning."""
     if cache_token is None:
         return stratified_sample(base, sample)
     key = (sample, cache_token)
     if key not in _SAMPLE_CACHE:
-        s = stratified_sample(base, sample).persist()
+        s = stratified_sample(base, sample)
+        if _one_partition(base):
+            s = s.coalesce(1)
+        s = s.persist()
         s.count()
         _SAMPLE_CACHE[key] = s
     return _SAMPLE_CACHE[key]

@@ -12,6 +12,21 @@ SF_SMALL = "/root/testdata/sf0.001"
 SF_MEDIUM = "/root/testdata/sf0.01"
 
 
+def _driver_memory() -> str:
+    """Heap of the one shared test JVM: 16g where the machine has 32 GB or
+    more, else half of physical memory. The other half is for the OS, the
+    JVM's off-heap memory (its RSS runs above the heap), the pytest
+    process (pandas, DuckDB) and the Python workers: a 16g heap on a
+    16 GB machine grows until the OS OOM killer takes the JVM."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f
+                      if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "16g"
+    return f"{min(16 * 1024, kb // 2048)}m"
+
+
 @pytest.fixture(scope="session")
 def spark():
     from pyspark.sql import SparkSession
@@ -19,17 +34,12 @@ def spark():
          .config("spark.sql.shuffle.partitions", "8")
          .config("spark.ui.enabled", "false")
          .config("spark.ui.showConsoleProgress", "false")
-         # one JVM hosts the WHOLE ~1250-test suite: cached samples,
-         # persisted TopK state, and streaming state accumulate across
-         # modules. 4g died at the suite tail (accumulator-server
-         # ConnectionRefused cascade) when round 6 added persistence
-         # tests; 8g died the same way when round 7 added the sketch
-         # routes + multi-build tests; 12g hit the same cliff in the
-         # round-8 judge's co-scheduled run (heap OOM in an
-         # InMemoryRelation build at the tail) — 16g on this 128G box,
-         # plus the per-module cache trim below so growth stays bounded
-         # instead of racing the heap
-         .config("spark.driver.memory", "16g")
+         # one JVM hosts the whole suite: cached samples, persisted TopK
+         # state and streaming state accumulate across modules. Earlier
+         # 4g/8g/12g heaps died at the suite tail while the per-module
+         # cache trim below did not exist yet; with it, growth stays
+         # bounded by one module's working set
+         .config("spark.driver.memory", _driver_memory())
          .appName("snappy-aqp-spark-tests").getOrCreate())
     s.sparkContext.setLogLevel("ERROR")
     yield s

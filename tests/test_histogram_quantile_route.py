@@ -113,6 +113,19 @@ def test_hac_explicit_error_with_certifying_behavior_goes_exact(spark):
     assert row["abs_err"] == 25.0                # sketch envelope
 
 
+@pytest.mark.parametrize("behavior", ["run_on_full_table",
+                                      "partial_run_on_base_table"])
+def test_explicit_error_rerouting_behaviors_route_exact(spark, behavior):
+    """Both rerouting behaviors send an explicit-error histogram query to
+    the exact route; bare WITH ERROR keeps the sketch under the same
+    behavior."""
+    aqp = _session(spark, "hqhacbeh")
+    q = ("SELECT APPROX_PERCENTILE(n_chars, 0.5) AS med FROM documents "
+         "WITH ERROR")
+    assert aqp.route(f"{q} 0.05 BEHAVIOR '{behavior}'").kind == "exact"
+    assert aqp.route(f"{q} BEHAVIOR '{behavior}'").kind == "histogram"
+
+
 def test_set_property_validation(spark):
     aqp = _session(spark, "hqval", on=False)
     with pytest.raises(fe.SQLFrontendError, match="boolean"):

@@ -378,6 +378,18 @@ def test_hac_contract_reroutes_to_exact(spark):
     assert got == exact
 
 
+@pytest.mark.parametrize("behavior", ["run_on_full_table",
+                                      "partial_run_on_base_table"])
+def test_hac_rerouting_behaviors_route_exact(spark, behavior):
+    """Both rerouting behaviors send a COUNT(DISTINCT) whose a-priori HLL
+    error breaks the contract to the exact route (a sketch has no
+    per-group base-table fallback, so partial routing is the full one)."""
+    aqp = _session(spark, "hllreroutebeh")
+    assert aqp.route("SELECT COUNT(DISTINCT o_custkey) AS a FROM orders "
+                     f"WITH ERROR 0.01 BEHAVIOR '{behavior}'"
+                     ).kind == "exact"
+
+
 def test_set_property_validation(spark):
     aqp = _session(spark, "hllval", on=False)
     with pytest.raises(fe.SQLFrontendError, match="boolean"):

@@ -113,6 +113,145 @@ def test_partitioning_invariance(spark, lineitem, method):
         assert base.equals(alt), f"layout changed the {method} sample"
 
 
+# one hash sample spec over the same lineitem rows written as one parquet
+# file and as four; the queries cover every estimator and HAC path that
+# reads the cached sample (integer measures, so exact reroutes over either
+# layout sum to the same doubles)
+_LAYOUT_DDL = ("CREATE SAMPLE TABLE {name} ON lineitem OPTIONS("
+               "qcs 'l_returnflag,l_linestatus', fraction '{fraction}', "
+               "method 'hash', seed '42'{extra})")
+_LAYOUT_CF = ("SELECT l_returnflag, SUM(l_quantity) AS sq, "
+              "AVG(l_quantity) AS aq, COUNT(*) AS c, "
+              "relative_error(sq) AS re, lower_bound(c) AS lb "
+              "FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag "
+              "WITH ERROR 0.5")
+_LAYOUT_QUERIES = {
+    "closed_form": _LAYOUT_CF,
+    "bootstrap": ("SELECT l_returnflag, AVG(l_quantity) AS aq, "
+                  "lower_bound(aq) AS lb, upper_bound(aq) AS ub "
+                  "FROM lineitem WHERE l_quantity > 10 "
+                  "GROUP BY l_returnflag ORDER BY l_returnflag "
+                  "WITH ERROR 0.5"),
+    "local_omit": ("SELECT l_returnflag, l_linestatus, "
+                   "SUM(l_quantity) AS sq, relative_error(sq) AS re "
+                   "FROM lineitem WHERE l_discount < 0.05 "
+                   "GROUP BY l_returnflag, l_linestatus "
+                   "ORDER BY l_returnflag, l_linestatus "
+                   "WITH ERROR 0.05 BEHAVIOR 'local_omit'"),
+    "partial_run_on_base_table": (
+        "SELECT l_returnflag, l_linestatus, SUM(l_quantity) AS sq, "
+        "relative_error(sq) AS re FROM lineitem WHERE l_quantity >= 3 "
+        "GROUP BY l_returnflag, l_linestatus "
+        "ORDER BY l_returnflag, l_linestatus "
+        "WITH ERROR 0.001 BEHAVIOR 'partial_run_on_base_table'"),
+}
+
+
+@pytest.fixture(scope="module")
+def layout_bases(lineitem, tmp_path_factory):
+    """lineitem written as one parquet file (one partition) and as four."""
+    root = tmp_path_factory.mktemp("layouts")
+    for name, df in (("one", lineitem.coalesce(1)),
+                     ("four", lineitem.repartition(4, "l_orderkey"))):
+        df.write.parquet(str(root / name))
+    return {name: str(root / name) for name in ("one", "four")}
+
+
+def _layout_sessions(spark, layout_bases, tag):
+    from snappy_aqp_spark.api import AQPSession
+    out = {}
+    for name, path in layout_bases.items():
+        aqp = AQPSession(spark, error=0.2, confidence=0.95,
+                         behavior="do_nothing",
+                         data_token=f"{tag}-{name}")
+        aqp.register_table("lineitem", spark.read.parquet(path))
+        out[name] = aqp
+    return out
+
+
+def _jobs_and_plan(spark, df, group):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the query's own operators: what follows the first InMemoryRelation
+    # is the cached sample's build plan
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return (len(sc.statusTracker().getJobIdsForGroup(group)),
+            plan.split("InMemoryRelation")[0])
+
+
+def test_one_partition_sample_answers_match_and_run_shuffle_free(
+        spark, layout_bases):
+    """A sample of a one-partition base is cached as one partition: its
+    closed-form plan has no exchange and runs as one Spark job, while the
+    four-file base keeps the shuffled plan. Every route answers the same,
+    bit for bit (float reprs compared, NaN included)."""
+    layout_sessions = _layout_sessions(spark, layout_bases, "layout")
+    assert (layout_sessions["one"].tables["lineitem"].rdd
+            .getNumPartitions() == 1)
+    assert (layout_sessions["four"].tables["lineitem"].rdd
+            .getNumPartitions() == 4)
+    for name, aqp in layout_sessions.items():
+        aqp.sql(_LAYOUT_DDL.format(name=f"layout_{name}", fraction=0.1,
+                                   extra=""))
+    one, four = layout_sessions["one"], layout_sessions["four"]
+    assert one.route(_LAYOUT_QUERIES["bootstrap"]).estimator == "bootstrap"
+    for kind, q in _LAYOUT_QUERIES.items():
+        a, b = one.sql(q).collect(), four.sql(q).collect()
+        assert a and repr(a) == repr(b), kind
+
+    jobs, plan = _jobs_and_plan(spark, one.sql(_LAYOUT_CF), "layout-one")
+    assert "Exchange" not in plan, plan
+    assert jobs == 1
+    jobs, plan = _jobs_and_plan(spark, four.sql(_LAYOUT_CF), "layout-four")
+    assert "Exchange hashpartitioning" in plan, plan
+    assert jobs > 1
+
+
+def _cached_rdd_ids(spark) -> set[int]:
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_sample_blocks_freed_by_drop_invalidate_and_rebuild(
+        spark, layout_bases):
+    """The frame a sample build persists (coalesced for the one-file base)
+    is the one the temp view and the sample cache hold: dropping the
+    table, invalidating its base and rebuilding it each free its blocks."""
+    from snappy_aqp_spark.plans.approx_query import invalidate_base_table
+    layout_sessions = _layout_sessions(spark, layout_bases, "lifetime")
+
+    def build(extra=""):
+        before = _cached_rdd_ids(spark)
+        for name, aqp in layout_sessions.items():
+            # its own fraction: Spark serves a persist of a plan it has
+            # cached already from the existing blocks
+            aqp.sql(_LAYOUT_DDL.format(name=f"life_{name}", fraction=0.2,
+                                       extra=extra))
+        new = _cached_rdd_ids(spark) - before
+        assert len(new) == 2, new
+        return new
+
+    new = build()
+    for name, aqp in layout_sessions.items():
+        aqp.drop_sample_table(f"life_{name}")
+    assert not new & _cached_rdd_ids(spark)
+
+    new = build()
+    for aqp in layout_sessions.values():
+        invalidate_base_table("lineitem", aqp._token)
+    assert not new & _cached_rdd_ids(spark)
+
+    new = build()
+    rebuilt = build(extra=", rebuild 'true'")
+    assert not new & _cached_rdd_ids(spark)
+    for name, aqp in layout_sessions.items():
+        aqp.drop_sample_table(f"life_{name}")
+    assert not rebuilt & _cached_rdd_ids(spark)
+
+
 def test_weighted_sample_quantile_tracks_truth(spark, duck):
     """the HT-weighted sample quantile lands near the exact population
     quantile (5% sample, lineitem prices) and replays bit-exactly on the
