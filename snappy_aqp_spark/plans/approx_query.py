@@ -253,25 +253,15 @@ _SAMPLE_CACHE: dict[tuple, DataFrame] = {}
 # samples of one-partition bases were kept as one partition; 1 job after).
 # The reference caches analyzed AQP plans for the same reason
 # (internal/SnappyAQPSessionState.scala AQPQueryAnalyzer re-entrancy cache).
-# Only side-effect-free behaviors are cacheable: strict / run_on_full_table /
-# partial_run_on_base_table run an eager violation check with a
-# persist/unpersist lifecycle, so they rebuild per call. Specs are frozen
-# dataclasses and the data location is pinned by cache_token, so a cached
-# plan can never return different results.
+# Every behavior is cacheable. The error-contract decision of strict /
+# run_on_full_table / partial_run_on_base_table is a function of the spec
+# and the data, like the plan, so the entry holds the relation the decision
+# chose (the visible rows or the exact query); a strict raise is never
+# cached and repeats on every call. Specs are frozen dataclasses and the
+# data location is pinned by cache_token; every path that changes the data
+# behind a token evicts through _evict_plans, so the next call decides
+# again.
 _PLAN_CACHE: dict[tuple, DataFrame] = {}
-_CACHEABLE_BEHAVIORS = ("do_nothing", "local_omit")
-
-# HAC queries persist their (tiny) aggregate relation for the violation
-# check + visible output; the blocks are freed on the NEXT query rather
-# than relying on ContextCleaner GC — a long-lived session running many
-# HAC queries otherwise accumulates persisted blocks until driver GC. An
-# evicted result that the caller re-collects later just recomputes.
-_HAC_PERSISTED: list[DataFrame] = []
-
-
-def _evict_hac_persisted() -> None:
-    while _HAC_PERSISTED:
-        _HAC_PERSISTED.pop().unpersist()
 
 
 def invalidate_base_table(name: str, token: str | None = None) -> None:
@@ -724,70 +714,48 @@ def set_interactive_latency_mode(spark: SparkSession,
 def run_approx_query(spark: SparkSession, spec: ApproxQuerySpec,
                      tables: dict[str, DataFrame],
                      cache_token: str | None = None) -> DataFrame:
-    """Execute the approximate query; returns the visible-result DataFrame."""
-    _evict_hac_persisted()
-    behavior = spec.behavior
-    if cache_token is not None and behavior in _CACHEABLE_BEHAVIORS:
-        pkey = (spec, cache_token)
-        if pkey not in _PLAN_CACHE:
-            df = _prepare(spec, tables, sampled=True, cache_token=cache_token)
-            fin_rel = (_bootstrap_fin_rel(spark, spec, df, cache_token)
-                       if spec.estimator == "bootstrap"
-                       else _closedform_fin_rel(spec, df))
-            _PLAN_CACHE[pkey] = _project_visible(spec, _apply_tail(
-                spec, _finalize_visible(spec, fin_rel)))
-        return _PLAN_CACHE[pkey]
+    """Execute the approximate query; returns the visible-result DataFrame.
+    With a ``cache_token`` the answer is kept in _PLAN_CACHE, whatever the
+    behavior; without one it is built per call."""
+    if cache_token is None:
+        return _answer(spark, spec, tables, None)
+    pkey = (spec, cache_token)
+    if pkey not in _PLAN_CACHE:
+        _PLAN_CACHE[pkey] = _answer(spark, spec, tables, cache_token)
+    return _PLAN_CACHE[pkey]
 
+
+def _answer(spark: SparkSession, spec: ApproxQuerySpec,
+            tables: dict[str, DataFrame],
+            cache_token: str | None) -> DataFrame:
+    """Build fin_rel once and return the relation ``spec.behavior`` answers
+    with. strict / run_on_full_table / a global partial reroute decide the
+    error contract with one check job over fin_rel, as the reference checks
+    the error flags on the computed aggregation (AQPRules.scala:341-363);
+    a grouped partial reroute stays lazy and decides per group."""
     df = _prepare(spec, tables, sampled=True, cache_token=cache_token)
-    gcols = _gcols(spec)
-    if spec.estimator == "bootstrap":
-        fin_rel = _bootstrap_fin_rel(spark, spec, df, cache_token)
+    fin_rel = (_bootstrap_fin_rel(spark, spec, df, cache_token)
+               if spec.estimator == "bootstrap"
+               else _closedform_fin_rel(spec, df))
+    behavior, gcols = spec.behavior, _gcols(spec)
+    viol = F.expr(_violation_cond(spec))
+    if behavior == "partial_run_on_base_table" and gcols:
+        # violating groups -> exact, the others -> approx
+        bad_keys = fin_rel.where(viol).select(*gcols).distinct()
+        out = _finalize_visible(spec, fin_rel.where(~viol)).unionByName(
+            _exact_query(spec, tables, restrict_to=bad_keys))
+    elif (behavior in ("do_nothing", "local_omit")
+          or fin_rel.where(viol).limit(1).count() == 0):
+        out = _finalize_visible(spec, fin_rel)
+    elif behavior == "strict":
+        raise cf.ErrorLimitExceededException(
+            f"relative error exceeded {spec.error} (behavior=strict)")
     else:
-        fin_rel = _closedform_fin_rel(spec, df)
-
-    if behavior in ("do_nothing", "local_omit"):
-        return _project_visible(spec,
-                                _apply_tail(spec, _finalize_visible(spec, fin_rel)))
-
-    # The violation check and the visible output both consume fin_rel; the
-    # reference checks error flags on the already-computed aggregation
-    # (AQPRules.scala:341-363), so persist the (tiny: one row per group)
-    # aggregate result instead of recomputing it per consumer. Freed
-    # eagerly where the output no longer reads it, and by next-query
-    # eviction otherwise (_evict_hac_persisted).
-    viol = _violation_cond(spec)
-    fin_rel = fin_rel.persist()
-    _HAC_PERSISTED.append(fin_rel)
-    if behavior == "strict":
-        if fin_rel.where(F.expr(viol)).limit(1).count() > 0:
-            fin_rel.unpersist()
-            raise cf.ErrorLimitExceededException(
-                f"relative error exceeded {spec.error} (behavior=strict)")
-        return _project_visible(spec,
-                                _apply_tail(spec, _finalize_visible(spec, fin_rel)))
-
-    if behavior == "run_on_full_table":
-        if fin_rel.where(F.expr(viol)).limit(1).count() > 0:
-            fin_rel.unpersist()
-            return _project_visible(spec, _apply_tail(spec, _exact_query(spec, tables)))
-        return _project_visible(spec,
-                                _apply_tail(spec, _finalize_visible(spec, fin_rel)))
-
-    # partial_run_on_base_table: violating groups -> exact, others -> approx.
-    # With no GROUP BY there is a single global group, so partial reroute
-    # degenerates to full reroute (also the empty-input case: no group keys
-    # to join on).
-    if not gcols:
-        if fin_rel.where(F.expr(viol)).limit(1).count() > 0:
-            fin_rel.unpersist()
-            return _project_visible(spec, _apply_tail(
-                spec, _exact_query(spec, tables)))
-        return _project_visible(spec, _apply_tail(
-            spec, _finalize_visible(spec, fin_rel)))
-    bad_keys = fin_rel.where(F.expr(viol)).select(*gcols).distinct()
-    good = _finalize_visible(spec, fin_rel.where(~F.expr(viol)))
-    exact_bad = _exact_query(spec, tables, restrict_to=bad_keys)
-    return _project_visible(spec, _apply_tail(spec, good.unionByName(exact_bad)))
+        # run_on_full_table; a partial reroute with no GROUP BY has one
+        # global group (no group keys to join on, also on empty input),
+        # so it degenerates to the full reroute
+        out = _exact_query(spec, tables)
+    return _project_visible(spec, _apply_tail(spec, out))
 
 
 def run_exact_query(spark: SparkSession, spec: ApproxQuerySpec,

@@ -78,7 +78,6 @@ def _trim_spark_caches():
     aq._SAMPLE_CACHE.clear()
     aq._PLAN_CACHE.clear()
     aq._BS_ROWS_MEMO.clear()
-    _safe(aq._evict_hac_persisted)
     for df in list(dual._PREV_PERSISTED):
         _safe(df.unpersist)
     dual._PREV_PERSISTED.clear()

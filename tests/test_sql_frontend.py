@@ -1751,6 +1751,112 @@ def test_reattach_same_spec_serves_new_rows(spark, drop):
     assert s.sql(q).collect() == fresh.sql(q).collect()
 
 
+# --- HAC decisions through the plan cache ------------------------------------
+
+_HAC_REROUTE_TEXTS = {
+    "run_on_full_table": (
+        "SELECT l_returnflag, SUM(l_quantity) AS sq, lower_bound(sq) AS lb "
+        "FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag "
+        "WITH ERROR 0.001 BEHAVIOR 'run_on_full_table'"),
+    "partial_run_on_base_table": (
+        "SELECT l_returnflag, l_linestatus, SUM(l_quantity) AS sq, "
+        "lower_bound(sq) AS lb FROM lineitem "
+        "GROUP BY l_returnflag, l_linestatus "
+        "ORDER BY l_returnflag, l_linestatus "
+        "WITH ERROR 0.001 BEHAVIOR 'partial_run_on_base_table'"),
+}
+
+
+def _sql_jobs(aqp, text, group):
+    """(jobs started by ``aqp.sql(text)`` alone, the returned frame)."""
+    sc = aqp.spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        df = aqp.sql(text)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), df
+
+
+@pytest.mark.parametrize("behavior", sorted(_HAC_REROUTE_TEXTS))
+def test_repeated_reroute_sql_starts_no_jobs(aqp, behavior):
+    """The reroute decision is kept with the plan it chose: repeating the
+    text starts no Spark job in sql() and answers with the same rows."""
+    text = _HAC_REROUTE_TEXTS[behavior]
+    first = aqp.sql(text).collect()
+    assert first and all(r["lb"] is None for r in first)   # rerouted
+    jobs, df = _sql_jobs(aqp, text, f"hac-repeat-{behavior}")
+    assert jobs == 0
+    assert repr(df.collect()) == repr(first)
+
+
+def test_strict_violation_raises_on_every_repeat(aqp):
+    """A strict raise is never cached: every repeat checks and raises."""
+    from snappy_aqp_spark import ErrorLimitExceededException
+    text = ("SELECT l_returnflag, SUM(l_quantity) AS sq FROM lineitem "
+            "GROUP BY l_returnflag WITH ERROR 0.001 BEHAVIOR 'strict'")
+    for _ in range(3):
+        with pytest.raises(ErrorLimitExceededException):
+            aqp.sql(text)
+
+
+@pytest.mark.parametrize("behavior", sorted(_HAC_REROUTE_TEXTS))
+def test_reattach_decides_hac_again(spark, behavior):
+    """A cached reroute decision is made again after a re-attach under the
+    same spec: rows with no sampling error (every row, weight 1) flip the
+    decision from the exact route (NULL bounds) to the estimate."""
+    import dataclasses
+
+    from snappy_aqp_spark.sampling.samplers import stratified_sample
+    from snappy_aqp_spark.specs import SampleSpec
+    spec = SampleSpec("lineitem", ("l_orderkey", "l_linenumber"),
+                      ("l_returnflag", "l_linestatus"), "hash", 0.1, 50, 42)
+    text = _HAC_REROUTE_TEXTS[behavior]
+    s = AQPSession(spark, data_token=f"hac-reattach-{behavior}")
+    s.load_tables(SF_SMALL, ["lineitem"])
+    li = s.tables["lineitem"]
+    s.attach_sample_data("li_hac", stratified_sample(li, spec), spec)
+    exact = s.sql(text).collect()
+    assert all(r["lb"] is None for r in exact)
+    every_row = stratified_sample(li, dataclasses.replace(spec, fraction=1.0))
+    s.attach_sample_data("li_hac", every_row, spec)
+    approx = s.sql(text).collect()
+    assert len(approx) == len(exact)
+    assert all(r["lb"] == r["sq"] for r in approx)
+    s.drop_sample_table("li_hac")
+
+
+def test_mutation_decides_hac_again(spark, tmp_path):
+    """A cached strict decision is made again after a mutation
+    pass-through: a constant measure has no sampling error, and the rows
+    an INSERT adds make the same text violate its contract."""
+    from snappy_aqp_spark import ErrorLimitExceededException
+    spark.sql(f"CREATE TABLE hac_mut (k BIGINT, g STRING, amt DOUBLE) "
+              f"USING parquet LOCATION '{tmp_path}/hac_mut'")
+    try:
+        # amounts near the 2^20 fallback measure bound, which this table's
+        # measure gets: the error lattice resolves them, far smaller ones
+        # quantize to a zero CI
+        spark.sql("INSERT INTO hac_mut SELECT id, CAST(id % 2 AS STRING), "
+                  "250000.0D FROM range(400)")
+        s = AQPSession(spark, data_token="hac-mutation")
+        s.register_catalog_table("hac_mut")
+        s.sql("CREATE SAMPLE TABLE hac_mut_s ON hac_mut OPTIONS("
+              "qcs 'g', fraction '0.5', method 'hash', seed '42', "
+              "keyColumns 'k')")
+        text = ("SELECT g, SUM(amt) AS sv FROM hac_mut GROUP BY g ORDER BY g "
+                "WITH ERROR 0.01 BEHAVIOR 'strict'")
+        assert [r["sv"] for r in s.sql(text).collect()] == [5e7, 5e7]
+        assert [r["sv"] for r in s.sql(text).collect()] == [5e7, 5e7]
+        s.sql("INSERT INTO hac_mut SELECT id, CAST(id % 2 AS STRING), "
+              "CAST(id % 3 AS DOUBLE) * 250000 FROM range(400, 800)")
+        with pytest.raises(ErrorLimitExceededException):
+            s.sql(text)
+        s.sql("DROP TABLE hac_mut_s")
+    finally:
+        spark.sql("DROP TABLE IF EXISTS hac_mut")
+
+
 def test_show_sample_and_topk_tables(spark):
     """SHOW SAMPLE TABLES / SHOW TOPK TABLES list the session registries
     as relations; plain SHOW TABLES still passes through to Spark."""

@@ -814,53 +814,6 @@ def test_streaming_interval_join_fixture_matches_oracle(spark, duck):
     compare_frames(res, oracle)
 
 
-def test_tws_reservoir_matches_batch_oracle(spark, duck, tmp_path):
-    """QUARANTINED path (snappy_aqp_spark.experimental): Spark 4
-    transformWithState stratified reservoir — the per-stratum k-min-hash
-    fold converges to the batch sampler's pick (full value oracle).
-    Skipped where the TWS python worker's protobuf dependency is absent
-    (this container); the module is excluded from coverage claims until
-    this test passes somewhere. Runs unchanged on a stock PySpark 4
-    cluster."""
-    import pytest
-    from snappy_aqp_spark.experimental.tws_reservoir import (
-        final_reservoir, reservoir_oracle_sql, streaming_reservoir,
-        tws_available)
-    if not tws_available():
-        pytest.skip("transformWithState needs protobuf in the worker env")
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-    from snappy_aqp_spark.topk.api import _time_us
-    from tests.conftest import SF_SMALL, compare_frames
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{SF_SMALL}/events.parquet")
-    us = _time_us(df, "ts")
-    lo = df.select(F.min(us).alias("m")).collect()[0]["m"]
-    hi = df.select(F.max(us).alias("m")).collect()[0]["m"]
-    step = (hi - lo) // 3 + 1
-    (tmp_path / "in").mkdir()
-    for i in range(3):
-        part = df.where((us >= lo + i * step) & (us < lo + (i + 1) * step))
-        tbl = pa.Table.from_pandas(part.toPandas(), preserve_index=False)
-        tbl = tbl.cast(pa.schema(
-            [pa.field(f.name, pa.timestamp("us")) if f.name == "ts" else f
-             for f in tbl.schema]))
-        pq.write_table(tbl, str(tmp_path / "in" / f"b{i}.parquet"))
-    stream = (spark.readStream.schema(df.schema)
-              .option("maxFilesPerTrigger", "1")
-              .parquet(str(tmp_path / "in")))
-    out = streaming_reservoir(stream, "event_type", "event_id", 8, 42)
-    q = (out.writeStream.outputMode("append").format("memory")
-         .queryName("tws_sink")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    assert q.awaitTermination(300)
-    res = final_reservoir(spark.table("tws_sink")).orderBy("stratum", "id")
-    compare_frames(res, duck.sql(
-        reservoir_oracle_sql("events", "event_type", "event_id", 8, 42)))
-
-
 @pytest.mark.slow
 def test_streaming_left_join_fixture_matches_oracle(spark, duck):
     """LEFT OUTER stream-stream interval join: watermark-proved non-matches
