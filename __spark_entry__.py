@@ -31,6 +31,7 @@ from snappy_aqp_spark.plans.approx_query import (load_tables, oracle_sql_for,
                                                  visible_columns)
 from snappy_aqp_spark.specs import ApproxQuerySpec
 from snappy_aqp_spark.sql import frontend as fe
+from snappy_aqp_spark.stage_cache import StageCache, scratch_dir
 
 _SQL_DEFAULTS = {"error": 0.2, "confidence": 0.95, "behavior": "do_nothing"}
 
@@ -216,7 +217,8 @@ def _make_pipeline_runner(fx: dict) -> Callable[[SparkSession, str], DataFrame]:
         stages, final = fx["builder"](_SP, **fx["kw"])
         # cache_token = the data binding: a repeat call of the SAME
         # pipeline over the SAME sf_dir reuses the analyzed plan
-        # (dual._FINAL_SLOT); a rebound dir or changed stage text misses
+        # (the session's ``final`` cache); a rebound dir or changed stage
+        # text misses
         return run_stages(spark, stages, final, cache_token=sf_dir)
     return run
 
@@ -259,13 +261,12 @@ def _streaming_topk_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
     applyInPandasWithState Space-Saving operator; capacity >= distinct keys
     makes the maintained summary exactly the groupBy counts, so this
     streaming-stateful path gets a full value-hash oracle."""
-    import tempfile
     import uuid
     from pyspark.sql import functions as F
     from snappy_aqp_spark.streaming import final_topk, stateful_space_saving
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
-    tmp = tempfile.mkdtemp(prefix="aqp-stream-entry-")
+    tmp = scratch_dir("aqp-stream-entry-")
     for i in range(3):
         (df.where(F.pmod(F.col("event_id"), F.lit(3)) == i)
          .write.mode("append").parquet(f"{tmp}/in"))
@@ -288,20 +289,18 @@ def _incremental_append_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
     the MAINTAINED sample state; the oracle replays the batch sample —
     maintenance is bit-equal to batch by design, and this fixture holds
     the contract under the driver's value-hash check."""
-    import tempfile
     from pyspark.sql import functions as F
     from snappy_aqp_spark.fixtures import INCR_APPEND_SPEC, LI_HASH
-    from snappy_aqp_spark.plans.approx_query import _SAMPLE_CACHE
     from snappy_aqp_spark.streaming.maintenance import StreamingSampleMaintainer
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    tmp = tempfile.mkdtemp(prefix="aqp-incr-")
+    tmp = scratch_dir("aqp-incr-")
     m = StreamingSampleMaintainer(spark, LI_HASH, tmp)
     for i in range(3):
         m.process_batch(li.where(F.pmod(F.col("l_orderkey"), F.lit(3)) == i))
     token = f"incr@{tmp}"
     s = m.sample_df().persist()
     s.count()
-    _SAMPLE_CACHE[(LI_HASH, token)] = s
+    StageCache.of(spark).put("sample", (LI_HASH, token), s)
     return run_approx_query(spark, INCR_APPEND_SPEC, {"lineitem": li},
                             cache_token=token)
 
@@ -465,7 +464,6 @@ def _multi_sample_build_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch fan-out parity with the streaming populator: N hash samples
     of one base built in TWO scans (samplers.multi_hash_sample_build),
     then an approx query routes through the QCS-matching one."""
-    import tempfile
     from snappy_aqp_spark.specs import SampleSpec
     aqp = AQPSession(spark, data_token=f"mb@{sf_dir}", **_SQL_DEFAULTS)
     aqp.load_tables(sf_dir, ("lineitem",))
@@ -477,7 +475,7 @@ def _multi_sample_build_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("mb_fix_ls", SampleSpec("lineitem", keys, ("l_linestatus",),
                                  method="hash", fraction=0.1, seed=11)),
     ]
-    aqp.create_sample_tables(specs, tempfile.mkdtemp(prefix="aqp_mb_"))
+    aqp.create_sample_tables(specs, scratch_dir("aqp_mb_"))
     return aqp.sql(_MB_QUERY)
 
 
@@ -548,13 +546,9 @@ def _topk_persist_reattach_runner(spark: SparkSession,
     restored state, no rebuild scan (reference: TopK structures persist
     in the store and survive restart, topk/TopKRelation.scala:33-198)."""
     import dataclasses as _dc
-    import hashlib
-    import os
-    import tempfile
     from snappy_aqp_spark.fixtures import TOPK_DDL_SPEC, TOPK_DDL_WINDOW
     from snappy_aqp_spark.topk.api import load_topk, save_topk
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    path = os.path.join(tempfile.gettempdir(), f"aqp_topk_{tag}")
+    path = scratch_dir("aqp_topk_")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
     build_reg = TopKRegistry()
@@ -626,11 +620,10 @@ def _streaming_sql_surface_runner(spark: SparkSession, sf_dir: str) -> DataFrame
     (file_stream over the events rows) -> CREATE TOPK TABLE ON the stream
     -> STREAMING START -> drain -> SELECT * FROM <topk> -> STREAMING STOP.
     The stream-maintained sketch must equal the batch-built oracle."""
-    import tempfile
     from snappy_aqp_spark.api import AQPSession
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     aqp = AQPSession(spark, data_token=f"stream-sql@{sf_dir}", **_SQL_DEFAULTS)
-    src = tempfile.mkdtemp(prefix="aqp_stream_src_")
+    src = scratch_dir("aqp_stream_src_")
     spark.read.parquet(f"{sf_dir}/events.parquet").write.mode(
         "overwrite").parquet(src)
     aqp.sql("STREAMING INIT 1secs")
@@ -657,7 +650,6 @@ def _streaming_sliding_window_runner(spark: SparkSession,
     exactly once. Replay expands each event to its slide-aligned window
     starts in SQL."""
     import os
-    import tempfile
     import time
     import uuid
     import pyarrow as pa
@@ -671,7 +663,7 @@ def _streaming_sliding_window_runner(spark: SparkSession,
     delay_us = 2 * 86400 * 1_000_000
     from snappy_aqp_spark.topk.api import _time_us
     us = _time_us(df, "ts")
-    tmp = tempfile.mkdtemp(prefix="aqp-slide-")
+    tmp = scratch_dir("aqp-slide-")
     os.makedirs(f"{tmp}/in", exist_ok=True)
     lo = df.select(F.min(us).alias("m")).collect()[0]["m"]
     hi = df.select(F.max(us).alias("m")).collect()[0]["m"]
@@ -707,7 +699,6 @@ def _streaming_windowed_agg_runner(spark: SparkSession, sf_dir: str) -> DataFram
     the batch tumbling-window counts over windows with
     end <= max(ts) - delay. Late-drop semantics are pinned separately in
     tests/test_streaming.py::test_windowed_counts_drop_late_rows."""
-    import tempfile
     import time
     import uuid
     import pyarrow as pa
@@ -719,7 +710,7 @@ def _streaming_windowed_agg_runner(spark: SparkSession, sf_dir: str) -> DataFram
     win_us, delay_us = 3 * 86400 * 1_000_000, 2 * 86400 * 1_000_000
     from snappy_aqp_spark.topk.api import _time_us
     us = _time_us(df, "ts")
-    tmp = tempfile.mkdtemp(prefix="aqp-winagg-")
+    tmp = scratch_dir("aqp-winagg-")
     import os
     os.makedirs(f"{tmp}/in", exist_ok=True)
     lo = df.select(F.min(us).alias("m")).collect()[0]["m"]
@@ -760,7 +751,6 @@ def _streaming_hll_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream->AQP structure maintenance fan-out, aqpTablePopulator,
     SnappyContextAQPFunctions.scala:390-442)."""
     import os
-    import tempfile
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
@@ -770,7 +760,7 @@ def _streaming_hll_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
     us = _time_us(df, "ts")
-    tmp = tempfile.mkdtemp(prefix="aqp-shll-")
+    tmp = scratch_dir("aqp-shll-")
     os.makedirs(f"{tmp}/in", exist_ok=True)
     lo = df.select(F.min(us).alias("m")).collect()[0]["m"]
     hi = df.select(F.max(us).alias("m")).collect()[0]["m"]
@@ -822,12 +812,11 @@ def _streaming_hist_quantile_runner(spark: SparkSession,
     raw values (same shape as _streaming_hll_runner; the two sketches'
     merges are MAX and ADD respectively)."""
     import os
-    import tempfile
     from pyspark.sql import functions as F
     from snappy_aqp_spark.pipeline.quantiles import (
         histogram_bins_sql, histogram_quantile_from_bins_sql)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    tmp = tempfile.mkdtemp(prefix="aqp-shq-")
+    tmp = scratch_dir("aqp-shq-")
     os.makedirs(f"{tmp}/in", exist_ok=True)
     # three deterministic batch files split on doc_id
     for i in range(3):
@@ -873,7 +862,6 @@ def _streaming_dedup_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
     the drained sink holds exactly one row per event and the per-type
     aggregate equals the plain batch aggregate over events."""
     import os
-    import tempfile
     import time
     import uuid
     import pyarrow as pa
@@ -884,7 +872,7 @@ def _streaming_dedup_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
     from snappy_aqp_spark.topk.api import _time_us
     us = _time_us(df, "ts")
-    tmp = tempfile.mkdtemp(prefix="aqp-sdedup-")
+    tmp = scratch_dir("aqp-sdedup-")
     os.makedirs(f"{tmp}/in", exist_ok=True)
     lo = df.select(F.min(us).alias("m")).collect()[0]["m"]
     hi = df.select(F.max(us).alias("m")).collect()[0]["m"]
@@ -934,7 +922,6 @@ def _streaming_dedup_window_chain_runner(spark: SparkSession,
     chain's closed windows equal the plain windowed counts over events —
     the same replay oracle as streaming_windowed_agg."""
     import os
-    import tempfile
     import time
     import uuid
     import pyarrow as pa
@@ -946,7 +933,7 @@ def _streaming_dedup_window_chain_runner(spark: SparkSession,
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
     from snappy_aqp_spark.topk.api import _time_us
     us = _time_us(df, "ts")
-    tmp = tempfile.mkdtemp(prefix="aqp-chain-")
+    tmp = scratch_dir("aqp-chain-")
     os.makedirs(f"{tmp}/in", exist_ok=True)
     lo = df.select(F.min(us).alias("m")).collect()[0]["m"]
     hi = df.select(F.max(us).alias("m")).collect()[0]["m"]
@@ -990,7 +977,6 @@ def _streaming_interval_join_runner(spark: SparkSession,
     fully passed), so the drained sink aggregates to the plain batch
     interval join — the DuckDB replay."""
     import os
-    import tempfile
     import time
     import uuid
     import pyarrow as pa
@@ -1001,7 +987,7 @@ def _streaming_interval_join_runner(spark: SparkSession,
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
     from snappy_aqp_spark.topk.api import _time_us
     us = _time_us(df, "ts")
-    tmp = tempfile.mkdtemp(prefix="aqp-ssjoin-")
+    tmp = scratch_dir("aqp-ssjoin-")
     os.makedirs(f"{tmp}/in", exist_ok=True)
     lo = df.select(F.min(us).alias("m")).collect()[0]["m"]
     hi = df.select(F.max(us).alias("m")).collect()[0]["m"]
@@ -1043,13 +1029,12 @@ def _stream_static_enrich_runner(spark: SparkSession,
     replay is deterministic), then the enriched stream aggregates per
     tier in the same query — stateless join + one stateful aggregate."""
     import os
-    import tempfile
     import uuid
     from pyspark.sql import functions as F
     from snappy_aqp_spark.streaming.joins import stream_static_enrich
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
-    tmp = tempfile.mkdtemp(prefix="aqp-enrich-")
+    tmp = scratch_dir("aqp-enrich-")
     for i in range(3):
         (df.where(F.pmod(F.col("event_id"), F.lit(3)) == i)
          .write.mode("append").parquet(f"{tmp}/in"))
@@ -1084,7 +1069,6 @@ def _streaming_left_join_runner(spark: SparkSession,
     row's match window, so all provable non-matches drain — making the
     sink's summary the plain batch LEFT JOIN replay."""
     import os
-    import tempfile
     import time
     import uuid
     import pyarrow as pa
@@ -1095,7 +1079,7 @@ def _streaming_left_join_runner(spark: SparkSession,
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
     from snappy_aqp_spark.topk.api import _time_us
     us = _time_us(df, "ts")
-    tmp = tempfile.mkdtemp(prefix="aqp-ssljoin-")
+    tmp = scratch_dir("aqp-ssljoin-")
     os.makedirs(f"{tmp}/in", exist_ok=True)
     lo = df.select(F.min(us).alias("m")).collect()[0]["m"]
     hi = df.select(F.max(us).alias("m")).collect()[0]["m"]
@@ -1270,12 +1254,23 @@ _EXT_QUERY = ("SELECT ol_cat, sum(ol_amt) AS sa, absolute_error(sa) AS ae "
 _EXT_COLS = ("ol_id", "ol_cat", "ol_amt")
 
 
-def _ext_csv_write() -> None:
-    rows = [(i, (i * 7) % 5, f"{10.0 + (i % 13) * 0.25:.2f}")
+def _ext_csv_rows() -> list[tuple[int, int, str]]:
+    return [(i, (i * 7) % 5, f"{10.0 + (i % 13) * 0.25:.2f}")
             for i in range(1, 401)]
+
+
+def _ext_csv_write() -> None:
     with open(_EXT_CSV_PATH, "w") as f:
         f.write("ol_id,ol_cat,ol_amt\n")
-        f.writelines(f"{a},{b},{c}\n" for a, b, c in rows)
+        f.writelines(f"{a},{b},{c}\n" for a, b, c in _ext_csv_rows())
+
+
+def _ext_col_bounds() -> dict[str, float]:
+    """max |value| of the numeric non-key columns over the CSV rows: the
+    bounds the session derives when it builds the sample."""
+    _, cats, amts = zip(*_ext_csv_rows())
+    return {"ol_cat": float(max(map(abs, cats))),
+            "ol_amt": max(abs(float(a)) for a in amts)}
 
 
 def _external_csv_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1291,7 +1286,7 @@ def _external_csv_oracle() -> str:
     from snappy_aqp_spark.tables import TABLE_COLUMNS
     TABLE_COLUMNS.setdefault("orderline", _EXT_COLS)
     analyzed = analyze_text(_EXT_QUERY, build_catalog_from_ddl([_EXT_DDL]),
-                            _SQL_DEFAULTS,
+                            {**_SQL_DEFAULTS, "col_bounds": _ext_col_bounds()},
                             extra_cols={c.lower() for c in _EXT_COLS})
     assert analyzed.spec is not None
     sql = oracle_sql_for(analyzed.spec)
@@ -1343,11 +1338,7 @@ def _attach_sidecar_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
     via attach_sample(path) with NO DDL replay and routes a WITH ERROR
     query through it (reference: registrations persist in the catalog,
     hive/SnappyAQPSessionCatalog.scala:39,54 addSampleDataFrame)."""
-    import hashlib
-    import os
-    import tempfile
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    path = os.path.join(tempfile.gettempdir(), f"aqp_sidecar_{tag}")
+    path = scratch_dir("aqp_sidecar_")
     ddl = (_SIDECAR_FX["ddl"][0][:-1]
            + f", path '{path}', rebuild 'true')")
     a1 = AQPSession(spark, data_token=f"{sf_dir}#sidecar-create",
@@ -1378,8 +1369,8 @@ def _multimodal_real_video_runner(spark: SparkSession,
 # prepared-query memo for the INTERACTIVE query surface: fixture data is
 # static per sf_dir, every runner is a deterministic (spark, sf_dir) -> lazy
 # DataFrame, and plan construction + Catalyst analysis of the generated
-# expression trees dominates repeat-call latency (the engine's own
-# _PLAN_CACHE does the same for the AQP core). Keyed by the live
+# expression trees dominates repeat-call latency (the engine's ``plan``
+# cache does the same for the AQP core). Keyed by the live
 # SparkSession so a fresh session never sees stale plans.
 #
 # ETL-shaped pipelines (dedup / ANN / multimodal) are NOT memoized: their

@@ -9,10 +9,10 @@ Environment mirrors bench.py ($SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS) so the
 numbers are comparable with BENCH_full.json. Plans go to plans/r11/<q>_<tag>.txt
 when PROF_PLANS is set (tag via PROF_TAG, default 'before').
 
-cold = one timed iteration after clearing dual's prepared-plan slot and
-pipeline-scoped persisted stages (_FINAL_SLOT / _PREV_PERSISTED / _PREV_KEY;
-_IX_CACHE and the label cache are KEPT — indexes are build-once by declared
-design). This attributes engine work rather than cache-serving (round-10
+cold = one timed iteration after clearing the session's ``final`` and
+``pipeline`` caches (the prepared final plan and the pipeline-scoped
+persisted stages; the ``index`` and ``labels`` caches are KEPT — indexes
+are build-once by declared design). This attributes engine work rather than cache-serving (round-10
 VERDICT item 1).
 """
 
@@ -40,16 +40,10 @@ R11 = ["pii_scan", "duplicate_spans", "ann_cosine_topk", "sessionize_events",
        "dedup_lines", "bpe_pair_counts", "skew_salted_join"]
 
 
-def _clear_pipeline_caches():
-    from snappy_aqp_spark.pipeline import dual
-    dual._FINAL_SLOT[0] = None
-    for df in list(dual._PREV_PERSISTED):
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    dual._PREV_PERSISTED.clear()
-    dual._PREV_KEY[0] = None
+def _clear_pipeline_caches(spark):
+    from snappy_aqp_spark.stage_cache import StageCache
+    StageCache.of(spark).clear("pipeline")
+    StageCache.of(spark).clear("final")
 
 
 def main() -> None:
@@ -76,11 +70,10 @@ def main() -> None:
     for name in names:
         if name == "cluster_labels_build":
             from snappy_aqp_spark.pipeline import clusters as _cl
+            from snappy_aqp_spark.stage_cache import StageCache
 
             def once():
-                for df in _cl._LABEL_CACHE.values():
-                    df.unpersist()
-                _cl._LABEL_CACHE.clear()
+                StageCache.of(spark).clear("labels")
                 spark.read.parquet(f"{SF_DIR}/documents.parquet") \
                     .createOrReplaceTempView("documents")
                 _cl.cluster_labels(spark, data_token=SF_DIR).count()
@@ -93,7 +86,7 @@ def main() -> None:
         sc.setJobDescription(f"prime:{name}")
         once()
         # COLD: pipeline-scoped caches cleared, one timed iteration
-        _clear_pipeline_caches()
+        _clear_pipeline_caches(spark)
         group = f"prof_{name}_cold"
         sc.setJobGroup(group, name)
         t0 = time.time()

@@ -36,9 +36,8 @@ def main() -> None:
     def once():
         if name == "cluster_labels_build":
             from snappy_aqp_spark.pipeline import clusters as _cl
-            for df in _cl._LABEL_CACHE.values():
-                df.unpersist()
-            _cl._LABEL_CACHE.clear()
+            from snappy_aqp_spark.stage_cache import StageCache
+            StageCache.of(spark).clear("labels")
             spark.read.parquet(f"{SF_DIR}/documents.parquet") \
                 .createOrReplaceTempView("documents")
             _cl.cluster_labels(spark, data_token=SF_DIR).count()

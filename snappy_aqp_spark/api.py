@@ -29,13 +29,13 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from .catalog import SampleCatalog, SampleInfo
-from .plans.approx_query import (cached_sample, get_sample,
-                                 invalidate_base_table, run_approx_query,
-                                 set_sample)
+from .plans.approx_query import get_sample, run_approx_query
 from .sampling.samplers import stratified_sample
 from .specs import ApproxAgg, ApproxQuerySpec, SampleSpec
 from .sql import frontend as fe
-from .tables import DEFAULT_COL_BOUNDS, TABLE_COLUMNS, TABLE_KEYS
+from .stage_cache import StageCache, scratch_dir
+from .tables import (BUILTIN_TABLES, DEFAULT_COL_BOUNDS, TABLE_COLUMNS,
+                     TABLE_KEYS)
 
 
 def spec_from_ddl(base: str | None, opts: dict[str, str],
@@ -843,11 +843,24 @@ class AQPSession:
         out = {}
         for n, sp in named_specs:
             sdf = self.spark.read.parquet(subdirs[n])
-            set_sample(sp, self._token, sdf)
+            self._set_sample(sp, sdf)
             self.catalog.register(SampleInfo(n, sp, subdirs[n]))
             sdf.createOrReplaceTempView(n)
             out[n] = sdf
         return out
+
+    def _set_sample(self, spec: SampleSpec, df: DataFrame | None) -> None:
+        """Install ``df`` as this session's sample for ``spec``, or drop
+        the entry when ``df`` is None. Plans and memos prepared over the
+        previous entry go with it, and its blocks are freed (Spark would
+        serve a rebuild's persist of the same plan from the old blocks):
+        a re-attach under the same spec must never be served the old
+        rows."""
+        cache = StageCache.of(self.spark)
+        if df is None or cache.get("sample", (spec, self._token)) is not df:
+            cache.evict(self._token, sample=spec)
+        if df is not None:
+            cache.put("sample", (spec, self._token), df)
 
     def _derive_col_bounds(self, base_df: DataFrame, spec: SampleSpec,
                            force: bool = False) -> None:
@@ -859,7 +872,7 @@ class AQPSession:
         incrementally (max only grows)."""
         from pyspark.sql import functions as F
         import pyspark.sql.types as T
-        if spec.base_table in TABLE_COLUMNS:
+        if spec.base_table in BUILTIN_TABLES:
             # built-in schema: bounds are static by contract (fixture
             # oracles derive session-free and must see the same max_abs)
             return
@@ -895,8 +908,8 @@ class AQPSession:
             # rebuild must actually re-sample: drop the cached sample so
             # the build branch below runs and overwrites any persisted
             # parquet at ``path``
-            set_sample(spec, self._token, None)
-        sample = cached_sample(spec, self._token)
+            self._set_sample(spec, None)
+        sample = StageCache.of(self.spark).get("sample", (spec, self._token))
         if sample is None and attaching:
             # ATTACH instead of rebuild: the sample content is a
             # deterministic function of (spec, base data), so a previously
@@ -907,7 +920,7 @@ class AQPSession:
             # ColumnFormatSamplingRelation). ``rebuild=True`` forces a
             # re-sample after base-table mutation.
             sample = self.spark.read.parquet(path)
-            set_sample(spec, self._token, sample)
+            self._set_sample(spec, sample)
             # bounds from the ATTACHED rows, not the base (the base scan is
             # exactly what attach avoids); the 2x headroom in measure_bound
             # absorbs sample-vs-population max gaps
@@ -927,11 +940,12 @@ class AQPSession:
                     col_bounds={c: v for c, v in self.col_bounds.items()
                                 if c in cols})
                 sample = self.spark.read.parquet(path)
+                self._set_sample(spec, sample)
             elif materialize:
                 sample = get_sample(base_df, spec, self._token)
             else:
                 sample = stratified_sample(base_df, spec)
-            set_sample(spec, self._token, sample)
+                self._set_sample(spec, sample)
         self.catalog.register(SampleInfo(name, spec, path))
         # the sample is a first-class queryable relation: plain SQL scans it
         # by name (reference `select * from $sampleTable`,
@@ -990,7 +1004,7 @@ class AQPSession:
     def drop_sample_table(self, name: str) -> None:
         info = self.catalog.get(name)
         if info:
-            set_sample(info.spec, self._token, None)
+            self._set_sample(info.spec, None)
         self.catalog.drop(name)
         self.spark.catalog.dropTempView(name)
 
@@ -1053,7 +1067,7 @@ class AQPSession:
         if missing:
             raise ValueError(f"not a sample relation: missing hidden "
                              f"column(s) {missing}")
-        set_sample(spec, self._token, df)
+        self._set_sample(spec, df)
         self.catalog.register(SampleInfo(name, spec, None))
         df.createOrReplaceTempView(name)
         self._derive_col_bounds(df, spec)
@@ -1179,7 +1193,7 @@ class AQPSession:
         state-carrying scale path."""
         n = name.lower()
         self.tables[n] = self.streaming.snapshot(name)
-        invalidate_base_table(n, token=self._token)
+        StageCache.of(self.spark).evict(self._token, base=n)
         for info in self.catalog.for_base(n):
             # bounds grow with the stream: max-merge the BATCH's maxima
             # (incremental — never a rescan of the accumulated snapshot,
@@ -1235,7 +1249,7 @@ class AQPSession:
         if n in self._view_backed:
             # session-registered relation (temp-view backed):
             # unregister + invalidate samples built over it
-            invalidate_base_table(n, token=self._token)
+            StageCache.of(self.spark).evict(self._token, base=n)
             self.tables.pop(n, None)
             self._view_backed.discard(n)
             self.spark.catalog.dropTempView(name)
@@ -1245,7 +1259,7 @@ class AQPSession:
         if n in self.tables:
             # registered catalog-table base: a cached sample over the
             # dropped data must not survive into a same-named recreate
-            invalidate_base_table(n, token=self._token)
+            StageCache.of(self.spark).evict(self._token, base=n)
         self.tables.pop(n, None)
         return self.spark.sql(text)       # regular Spark table/view
 
@@ -1259,7 +1273,7 @@ class AQPSession:
         # are dropped BEFORE the mutation runs, so the next approx
         # query re-samples the post-mutation data (scoped to this
         # session's data token)
-        invalidate_base_table(t, token=self._token)
+        StageCache.of(self.spark).evict(self._token, base=t)
         res = self.spark.sql(text)
         if t in self.tables and self.spark.catalog.tableExists(t):
             # catalog-table base (register_catalog_table): the stored
@@ -1624,7 +1638,6 @@ class AQPSession:
         between its CREATEs, create_and_load_NYCTaxiCol_table.sql).
         Results are identical to statement-by-statement execution (pinned
         by pytest); returns one DataFrame per statement in script order."""
-        import tempfile
         stmts = self._split_statements(script)
         results: list[DataFrame | None] = []
         group: list[tuple[int, str, SampleSpec]] = []
@@ -1637,8 +1650,7 @@ class AQPSession:
                 results[idx] = self.create_sample_table_from_spec(name, spec)
                 group.clear()
                 return
-            root = (sample_path_root
-                    or tempfile.mkdtemp(prefix="aqp_script_build_"))
+            root = sample_path_root or scratch_dir("aqp_script_build_")
             built = self.create_sample_tables(
                 [(n, sp) for _, n, sp in group], root)
             for idx, n, _ in group:

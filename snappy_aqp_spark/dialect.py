@@ -48,27 +48,8 @@ def collect_list(dialect: str, expr_sql: str) -> str:
     return f"collect_list({expr_sql})" if dialect == SPARK else f"list({expr_sql})"
 
 
-def log_fn(dialect: str, expr_sql: str) -> str:
-    """Natural log: Spark `ln`, DuckDB `ln` — shared; kept for clarity."""
-    return f"ln({expr_sql})"
-
-
 def nan_literal() -> str:
     return "CAST('NaN' AS DOUBLE)"
-
-
-def epoch_micros(dialect: str, ts_sql: str) -> str:
-    """Timestamp -> microseconds since epoch as BIGINT (UTC), both engines."""
-    if dialect == SPARK:
-        return f"unix_micros({ts_sql})"
-    return f"epoch_us({ts_sql})"
-
-
-def make_ts(dialect: str, micros_sql: str) -> str:
-    """Microseconds since epoch -> timestamp."""
-    if dialect == SPARK:
-        return f"timestamp_micros(CAST({micros_sql} AS BIGINT))"
-    return f"make_timestamp(CAST({micros_sql} AS BIGINT))"
 
 
 def epoch_us_ntz(dialect: str, ts_sql: str) -> str:

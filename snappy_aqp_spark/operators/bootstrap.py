@@ -114,10 +114,6 @@ def inner_frags(agg: ApproxAgg, sc: AggScales, sample: SampleSpec,
     return out
 
 
-MASK_FRAG = ("__bmask",
-             None)  # filled in mask_frag() — needs the multiplicity expr
-
-
 def mask_frag(sample: SampleSpec, m_sql: str | None = None) -> dict[str, str]:
     """group-nonempty indicator per trial (BootstrapMultiplicityAggregate)."""
     m = m_sql or multiplicity_sql(sample)

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from . import dual
 from .dedup import minhash_lsh_stages
 from ..dialect import DUCKDB, SPARK, dlit
+from ..stage_cache import StageCache
 
 
 def _union_find_local(edges: list[tuple[int, int]]) -> list[tuple[int, int]]:
@@ -139,15 +140,6 @@ def connected_components(pairs: DataFrame, src: str = "ida",
                       F.col("lab").alias("cluster_id"))
 
 
-# converged (doc_id, cluster_id) label tables, keyed by
-# (session, data_token, LSH params). The three downstream consumers
-# (dedup_clusters, clean_corpus, leakage_safe_split) all need the SAME
-# converged labels — without the memo each one re-runs pair detection and
-# the CC convergence loop from scratch. data_token=None disables caching
-# (callers whose temp view contents aren't identified by a token).
-_LABEL_CACHE: dict[tuple, DataFrame] = {}
-
-
 def cluster_labels(spark: SparkSession, threshold: float = 0.5, k: int = 7,
                    n_hashes: int = 32, bands: int = 8,
                    table: str = "documents", col: str = "text",
@@ -156,10 +148,17 @@ def cluster_labels(spark: SparkSession, threshold: float = 0.5, k: int = 7,
     a temp view): (doc_id, cluster_id); docs in no near-dup pair are
     singleton clusters of themselves. Persisted + materialized once, so
     every downstream split/filter/size pass reuses the converged table
-    instead of re-running pair detection and the CC loop."""
-    key = (spark, data_token, threshold, k, n_hashes, bands, table, col)
-    if data_token is not None and key in _LABEL_CACHE:
-        return _LABEL_CACHE[key]
+    instead of re-running pair detection and the CC loop.
+
+    With a ``data_token`` the table is kept in the session's ``labels``
+    cache: the three downstream consumers (dedup_clusters, clean_corpus,
+    leakage_safe_split) all need the SAME converged labels. Without one
+    (temp view contents not identified) nothing is cached."""
+    cache = StageCache.of(spark)
+    key = (data_token, threshold, k, n_hashes, bands, table, col)
+    lab = cache.get("labels", key) if data_token is not None else None
+    if lab is not None:
+        return lab
     stages, final = minhash_lsh_stages(SPARK, threshold=threshold, k=k,
                                        n_hashes=n_hashes, bands=bands,
                                        table=table, col=col)
@@ -173,9 +172,7 @@ def cluster_labels(spark: SparkSession, threshold: float = 0.5, k: int = 7,
                    F.coalesce("cluster_id", "doc_id").alias("cluster_id"))
            .persist())
     lab.count()
-    if data_token is not None:
-        _LABEL_CACHE[key] = lab
-    return lab
+    return lab if data_token is None else cache.put("labels", key, lab)
 
 
 def dedup_clusters(spark: SparkSession, threshold: float = 0.5, k: int = 7,

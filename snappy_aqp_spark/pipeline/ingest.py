@@ -31,27 +31,28 @@ from __future__ import annotations
 import json
 import math
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
                                StructType)
 
-_CACHE: dict[tuple, str] = {}
+from ..stage_cache import StageCache, scratch_dir
 
 
 def _jsonl_events_path(spark: SparkSession, sf_dir: str) -> str:
     """events as JSONL with every (event_id % 13 == 0) line truncated
     mid-record — deterministic malformed-line planting."""
-    key = ("jsonl", sf_dir)
-    p = _CACHE.get(key)
-    if p and os.path.isdir(p):
-        return p
+    return StageCache.of(spark).build(
+        "scratch_path", ("jsonl", sf_dir),
+        lambda: _write_jsonl_events(spark, sf_dir))
+
+
+def _write_jsonl_events(spark: SparkSession, sf_dir: str) -> str:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     rows = (spark.read.parquet(f"{sf_dir}/events.parquet")
             .select("event_id", "user_id", "event_type", "value")
             .toPandas())
-    p = tempfile.mkdtemp(prefix="aqp-jsonl-")
+    p = scratch_dir("aqp-jsonl-")
     n_shards = 4
     handles = [open(os.path.join(p, f"part-{i}.jsonl"), "w")
                for i in range(n_shards)]
@@ -65,7 +66,6 @@ def _jsonl_events_path(spark: SparkSession, sf_dir: str) -> str:
         handles[int(r.event_id) % n_shards].write(line + "\n")
     for h in handles:
         h.close()
-    _CACHE[key] = p
     return p
 
 
@@ -115,21 +115,19 @@ def jsonl_quarantine_oracle_sql() -> str:
 def _drifted_documents_path(spark: SparkSession, sf_dir: str) -> str:
     """two parquet drops with schema drift: drop B adds a ``quality``
     column (id-derived so the replay is deterministic)."""
-    key = ("drift", sf_dir)
-    p = _CACHE.get(key)
-    if p and os.path.isdir(p):
+    def write() -> str:
+        docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
+                .select("doc_id", "source", "n_chars"))
+        p = scratch_dir("aqp-drift-") + "/documents"
+        docs.where("doc_id % 2 = 0").coalesce(1) \
+            .write.mode("overwrite").parquet(f"{p}/drop=a")
+        (docs.where("doc_id % 2 = 1")
+         .withColumn("quality",
+                     (F.col("n_chars") % 100).cast("double") / 100.0)
+         .coalesce(1).write.mode("overwrite").parquet(f"{p}/drop=b"))
         return p
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .select("doc_id", "source", "n_chars"))
-    p = tempfile.mkdtemp(prefix="aqp-drift-") + "/documents"
-    docs.where("doc_id % 2 = 0").coalesce(1) \
-        .write.mode("overwrite").parquet(f"{p}/drop=a")
-    (docs.where("doc_id % 2 = 1")
-     .withColumn("quality",
-                 (F.col("n_chars") % 100).cast("double") / 100.0)
-     .coalesce(1).write.mode("overwrite").parquet(f"{p}/drop=b"))
-    _CACHE[key] = p
-    return p
+    return StageCache.of(spark).build("scratch_path", ("drift", sf_dir),
+                                      write)
 
 
 def schema_merge_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -174,14 +172,14 @@ def compact_small_files(spark: SparkSession, sf_dir: str,
     # once per (sf_dir, small_files) like the jsonl/drift fixtures above;
     # the measured compaction (read -> size -> repartition -> write) still
     # runs in full on every call
-    key = ("frag", sf_dir, small_files)
-    frag = _CACHE.get(key)
-    if not (frag and os.path.isdir(frag)):
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        frag = tempfile.mkdtemp(prefix="aqp-compact-") + "/fragmented"
-        docs.repartition(small_files).write.mode("overwrite").parquet(frag)
-        _CACHE[key] = frag
-    base = tempfile.mkdtemp(prefix="aqp-compact-")
+    def write() -> str:
+        frag = scratch_dir("aqp-compact-") + "/fragmented"
+        spark.read.parquet(f"{sf_dir}/documents.parquet") \
+            .repartition(small_files).write.mode("overwrite").parquet(frag)
+        return frag
+    frag = StageCache.of(spark).build(
+        "scratch_path", ("frag", sf_dir, small_files), write)
+    base = scratch_dir("aqp-compact-")
     fragged = spark.read.parquet(frag)
     n_before = len([f for f in os.listdir(frag) if f.endswith(".parquet")])
     total = sum(os.path.getsize(os.path.join(frag, f))

@@ -35,6 +35,7 @@ from ..operators import closedform as cf
 from ..sampling.samplers import stratified_sample
 from ..sampling.sql import sample_cte_stages, stages_to_sql
 from ..specs import ApproxQuerySpec
+from ..stage_cache import StageCache
 from ..tables import TABLE_COLUMNS
 
 
@@ -238,104 +239,6 @@ def _select_frags(df: DataFrame, keep: list[str], frags: dict[str, str]) -> Data
                      *[F.expr(sql).alias(name) for name, sql in frags.items()])
 
 
-# session-lifetime cache of materialized samples: the reference maintains
-# sample *tables* (built once, queried many times); re-sampling per query
-# would scan the full base table every time. Keyed by (sample spec, data
-# location token) — content is deterministic, so caching never changes
-# results.
-_SAMPLE_CACHE: dict[tuple, DataFrame] = {}
-
-# prepared-plan cache: the generated closed-form/bootstrap expression trees
-# are large. Traced medians of the repository benchmark (perfbench
-# interactive_sql, ~5k-row samples, 4-core VM): a plan-cache miss spends
-# ~145 ms in AQPSession.sql building the DataFrame, a hit ~8 ms; Spark then
-# plans a hit in ~30 ms and executes it in ~190 ms (~470 ms, 5 jobs, before
-# samples of one-partition bases were kept as one partition; 1 job after).
-# The reference caches analyzed AQP plans for the same reason
-# (internal/SnappyAQPSessionState.scala AQPQueryAnalyzer re-entrancy cache).
-# Every behavior is cacheable. The error-contract decision of strict /
-# run_on_full_table / partial_run_on_base_table is a function of the spec
-# and the data, like the plan, so the entry holds the relation the decision
-# chose (the visible rows or the exact query); a strict raise is never
-# cached and repeats on every call. Specs are frozen dataclasses and the
-# data location is pinned by cache_token; every path that changes the data
-# behind a token evicts through _evict_plans, so the next call decides
-# again.
-_PLAN_CACHE: dict[tuple, DataFrame] = {}
-
-
-def invalidate_base_table(name: str, token: str | None = None) -> None:
-    """Drop every cached sample / prepared plan built over a base table.
-
-    Called on mutation pass-through (INSERT/UPDATE/DELETE/MERGE on a base
-    table, AQPSession.sql): without this the next approx query would serve
-    estimates from the persisted PRE-mutation sample while HAC exact
-    reroutes see the new rows — silent divergence beyond the error bound.
-    The reference rebuilds samples through the mutation path itself
-    (AnalyzeMutableOperations); the batch-parquet analog is re-sampling on
-    next use. ``token``: scope the eviction to one session's data token
-    (None evicts across all tokens — two sessions sharing a table name
-    over different data would otherwise cross-invalidate)."""
-    n = name.lower()
-
-    for key in [k for k in _SAMPLE_CACHE
-                if (token is None or k[1] == token)
-                and k[0].base_table.lower() == n]:
-        _SAMPLE_CACHE.pop(key).unpersist()
-
-    def touches(spec) -> bool:
-        if spec.sample.base_table.lower() == n:
-            return True
-        if (spec.from_relation or "").lower() == n:
-            return True
-        if any(j.table.lower() == n for j in spec.joins):
-            return True
-        return any(n in (t.lower() for t in sp.tables)
-                   for sp in spec.where_subs)
-
-    _evict_plans(token, touches)
-
-
-def _evict_plans(token: str | None, touches) -> None:
-    """Drop the prepared plans and bootstrap row-count memos whose query
-    spec ``touches``, scoped to one data token (None: every token). The
-    memo caches the prepared sample's row count under the same (spec,
-    token) key shape — a replaced sample could otherwise pin a stale size
-    (wrong FORM, never wrong results: both forms are bit-identical)."""
-    for cache in (_PLAN_CACHE, _BS_ROWS_MEMO):
-        for key in [k for k in cache
-                    if (token is None or k[1] == token) and touches(k[0])]:
-            cache.pop(key)
-
-
-def set_sample(sample, token: str, df: DataFrame | None) -> None:
-    """Install ``df`` as the cached sample for (sample spec, token), or
-    remove the entry and free its blocks when ``df`` is None (Spark would
-    serve a rebuild's persist of the same plan from the old blocks). Plans
-    and memos prepared over the previous entry are evicted in the same
-    step: a re-attach under the same spec must never be served a plan over
-    the old rows."""
-    def uses(spec) -> bool:
-        # WHERE-subquery trees read their own sample, and a scalar
-        # subquery's estimate is inlined into the outer plan
-        return spec.sample == sample or any(
-            sp.sample == sample or (sp.sub_spec is not None
-                                    and uses(sp.sub_spec))
-            for sp in spec.where_subs)
-
-    _evict_plans(token, uses)
-    if df is None:
-        old = _SAMPLE_CACHE.pop((sample, token), None)
-        if old is not None:
-            old.unpersist()
-    else:
-        _SAMPLE_CACHE[(sample, token)] = df
-
-
-def cached_sample(sample, token: str) -> DataFrame | None:
-    return _SAMPLE_CACHE.get((sample, token))
-
-
 def _one_partition(df: DataFrame) -> bool:
     """True when Spark plans ``df`` as one partition. Only an exchange-free
     plan is asked: building its RDD is file-split (or local-data) planning
@@ -348,7 +251,8 @@ def _one_partition(df: DataFrame) -> bool:
 
 
 def get_sample(base: DataFrame, sample, cache_token: str | None) -> DataFrame:
-    """materialized stratified sample for a SampleSpec (session-cached).
+    """materialized stratified sample for a SampleSpec, kept in the
+    session's ``sample`` cache under (spec, token).
 
     One partition in, one partition out: a sample is never larger than its
     base, so when Spark reads the base as one partition the sample is
@@ -357,15 +261,16 @@ def get_sample(base: DataFrame, sample, cache_token: str | None) -> DataFrame:
     ran as one task anyway). Answers do not depend on the partitioning."""
     if cache_token is None:
         return stratified_sample(base, sample)
-    key = (sample, cache_token)
-    if key not in _SAMPLE_CACHE:
+
+    def build() -> DataFrame:
         s = stratified_sample(base, sample)
         if _one_partition(base):
             s = s.coalesce(1)
         s = s.persist()
         s.count()
-        _SAMPLE_CACHE[key] = s
-    return _SAMPLE_CACHE[key]
+        return s
+    return StageCache.of(base.sparkSession).build(
+        "sample", (sample, cache_token), build)
 
 
 def _sql_literal(val) -> str:
@@ -635,15 +540,12 @@ def _bs_wide_inner_rel(spec: ApproxQuerySpec, df: DataFrame) -> DataFrame:
             .select(*keep, "__w.*"))
 
 
-# sample-size memo for the bootstrap form pick: one count() per
-# (spec, token) — the prepared sample relation is cached, so the count is
-# a cheap cached-scan job, paid once per plan-cache entry. Token-less
-# calls are NEVER memoized or counted (same policy as _SAMPLE_CACHE:
-# without a token the data location isn't pinned, so a cached count
-# could silently pick the wrong form for different data — and the count
-# itself would derive the un-cached sample once just to throw it away);
-# they take the wide form, the scale-safe default.
-_BS_ROWS_MEMO: dict[tuple, int] = {}
+# bootstrap form pick: one count() per (spec, token), kept in the
+# session's ``bs_rows`` cache -- the prepared sample relation is cached, so
+# the count is a cheap cached-scan job, paid once per plan. Token-less
+# calls are never counted: without a token the data location isn't pinned,
+# and the count would derive the un-cached sample once just to throw it
+# away; they take the wide form, the scale-safe default.
 
 # form-pick threshold in aggregation CELLS (sample rows x trials): below
 # it the legacy cross-join form wins (stays inside WholeStageCodegen —
@@ -674,16 +576,12 @@ def _bootstrap_fin_rel(spark: SparkSession, spec: ApproxQuerySpec,
                        df: DataFrame,
                        cache_token: str | None = None) -> DataFrame:
     gcols, qcols = _gcols(spec), _qcols(spec)
-    if cache_token is None:
-        inner = _bs_wide_inner_rel(spec, df)       # see _BS_ROWS_MEMO note
+    rows = (None if cache_token is None else StageCache.of(spark).build(
+        "bs_rows", (spec, cache_token), df.count))
+    if rows is not None and rows * spec.trials <= _BS_XJOIN_MAX_CELLS:
+        inner = _bs_xjoin_inner_rel(spark, spec, df)
     else:
-        mkey = (spec, cache_token)
-        if mkey not in _BS_ROWS_MEMO:
-            _BS_ROWS_MEMO[mkey] = df.count()
-        if _BS_ROWS_MEMO[mkey] * spec.trials <= _BS_XJOIN_MAX_CELLS:
-            inner = _bs_xjoin_inner_rel(spark, spec, df)
-        else:
-            inner = _bs_wide_inner_rel(spec, df)
+        inner = _bs_wide_inner_rel(spec, df)
     outer = _agg_frags(inner, gcols + [bs.TRIAL_COL], _bs_outer_frags(spec))
     trialv = _select_frags(outer, gcols + [bs.TRIAL_COL, "__bmask"],
                            _bs_trial_frags(spec))
@@ -715,14 +613,13 @@ def run_approx_query(spark: SparkSession, spec: ApproxQuerySpec,
                      tables: dict[str, DataFrame],
                      cache_token: str | None = None) -> DataFrame:
     """Execute the approximate query; returns the visible-result DataFrame.
-    With a ``cache_token`` the answer is kept in _PLAN_CACHE, whatever the
-    behavior; without one it is built per call."""
+    With a ``cache_token`` the answer is kept in the session's ``plan``
+    cache, whatever the behavior; without one it is built per call."""
     if cache_token is None:
         return _answer(spark, spec, tables, None)
-    pkey = (spec, cache_token)
-    if pkey not in _PLAN_CACHE:
-        _PLAN_CACHE[pkey] = _answer(spark, spec, tables, cache_token)
-    return _PLAN_CACHE[pkey]
+    return StageCache.of(spark).build(
+        "plan", (spec, cache_token),
+        lambda: _answer(spark, spec, tables, cache_token))
 
 
 def _answer(spark: SparkSession, spec: ApproxQuerySpec,
@@ -978,62 +875,3 @@ def oracle_sql_for(spec: ApproxQuerySpec, dialect: str = DUCKDB,
     if spec.limit is not None:
         final += f" LIMIT {spec.limit}"
     return stages_to_sql(stages, final)
-
-
-def exact_oracle_sql_for(spec: ApproxQuerySpec, dialect: str = DUCKDB) -> str:
-    """Oracle for the exact path (routing fallback / benchmarking)."""
-    from ..tables import TABLE_COLUMNS
-
-    def rel(name: str, alias: str | None) -> str:
-        return f"{name} AS {alias}" if alias else name
-    start_name = spec.from_relation or spec.sample.base_table
-    start_al = spec.from_alias or start_name
-    # leftmost-wins dedup of duplicate column names (see prepared_stage);
-    # unknown-registry relations fall back to SELECT *
-    rels = ([(start_name, start_al)]
-            + [(j.table, j.alias or j.table) for j in spec.joins])
-    sel: list[str] = []
-    if all(n.lower() in TABLE_COLUMNS for n, _ in rels):
-        seen: set[str] = set()
-        for name, alias in rels:
-            for c in TABLE_COLUMNS[name.lower()]:
-                if c.lower() not in seen:
-                    seen.add(c.lower())
-                    sel.append(f"{alias}.{c}")
-    else:
-        sel = ["*"]
-    frm = rel(start_name, spec.from_alias)
-    for j in spec.joins:
-        if j.how == "cross":
-            frm += f" CROSS JOIN {rel(j.table, j.alias)}"
-        else:
-            frm += f" {j.how.upper()} JOIN {rel(j.table, j.alias)} ON {j.on}"
-    sql = f"SELECT {', '.join(sel)} FROM {frm}"
-    where_full = full_where_sql(spec)
-    if where_full:
-        sql += f" WHERE {where_full}"
-    if spec.group_by:
-        gp = ", ".join(f"{g} AS __g{i}"
-                       for i, g in enumerate(spec.group_by))
-        sql = f"SELECT *, {gp} FROM ({sql}) __e"
-    gcols = _gcols(spec)
-    parts = [f"__g{i} AS {name}" for i, name in enumerate(spec.group_out)]
-    parts += [f"{s} AS {n}" for n, s in _exact_frags(spec).items()]
-    group = ", ".join(gcols) or None
-    out = f"SELECT {', '.join(parts)} FROM ({sql}) __b"
-    if group:
-        out += f" GROUP BY {group}"
-    out = _derive_sql(spec, out, "__v0")
-    final = f"SELECT {', '.join(visible_columns(spec))} FROM ({out}) __v"
-    if spec.having:
-        final += f" WHERE {spec.having}"
-    if spec.order_by:
-        final += f" ORDER BY {', '.join(spec.order_by)}"
-    if spec.limit is not None:
-        final += f" LIMIT {spec.limit}"
-    sub_stages = []
-    for i, sp in enumerate(spec.where_subs):
-        if sp.sample is not None:        # full_where_sql references __subs{i}
-            sub_stages += sample_cte_stages(sp.sample, out_name=f"__subs{i}",
-                                            prefix=f"__s{i}")
-    return stages_to_sql(sub_stages, final) if sub_stages else final

@@ -47,11 +47,6 @@ def qsum_sql(term_sql: str, s: int) -> str:
     return f"SUM(CAST(FLOOR(({term_sql}) * {pow2_literal(s)}) AS BIGINT))"
 
 
-def unscale_sql(int_sql: str, s: int) -> str:
-    """Back to double: CAST(i AS DOUBLE) * 2^-s (exact power-of-two multiply)."""
-    return f"(CAST({int_sql} AS DOUBLE) * {pow2_literal(-s)})"
-
-
 def measure_scale(max_abs: float, max_bits: int = 21) -> int:
     """Scale for quantizing a *measure* column to integers.
 

@@ -31,9 +31,10 @@ from __future__ import annotations
 
 import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..stage_cache import StageCache, scratch_dir
 
 
 def exchange_count(df: DataFrame) -> int:
@@ -67,28 +68,23 @@ def write_bucketed(spark: SparkSession, df: DataFrame, table: str,
     writer.saveAsTable(table)
 
 
-_BUCKET_CACHE: dict[tuple, tuple[str, str]] = {}
-
-
 def bucketed_tables(spark: SparkSession, sf_dir: str,
                     n_buckets: int = 8) -> tuple[str, str]:
     """lineitem + orders written bucketed by the order key (once per
     (session, sf_dir); later calls reuse the catalog tables). Returns the
     two table names."""
-    key = (id(spark.sparkContext), sf_dir, n_buckets)
-    if key in _BUCKET_CACHE:
-        li, od = _BUCKET_CACHE[key]
-        if (spark.catalog.tableExists(li)
-                and spark.catalog.tableExists(od)):
-            return li, od
     tag = f"b{n_buckets}_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
     li, od = f"lineitem_{tag}", f"orders_{tag}"
-    base = tempfile.mkdtemp(prefix="aqp-bucketed-")
-    write_bucketed(spark, spark.read.parquet(f"{sf_dir}/lineitem.parquet"),
-                   li, "l_orderkey", n_buckets, base)
-    write_bucketed(spark, spark.read.parquet(f"{sf_dir}/orders.parquet"),
-                   od, "o_orderkey", n_buckets, base)
-    _BUCKET_CACHE[key] = (li, od)
+
+    def write() -> str:
+        base = scratch_dir("aqp-bucketed-")
+        for name, t, k in ((li, "lineitem", "l_orderkey"),
+                           (od, "orders", "o_orderkey")):
+            write_bucketed(spark, spark.read.parquet(f"{sf_dir}/{t}.parquet"),
+                           name, k, n_buckets, base)
+        return base
+    StageCache.of(spark).build("scratch_path",
+                               ("bucketed", sf_dir, n_buckets), write)
     return li, od
 
 
@@ -130,20 +126,15 @@ def write_partitioned(spark: SparkSession, df: DataFrame, path: str,
     df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
 
 
-_PART_CACHE: dict[tuple, str] = {}
-
-
 def _partitioned_documents(spark: SparkSession, sf_dir: str) -> str:
-    key = (sf_dir,)
-    path = _PART_CACHE.get(key)
-    if path and os.path.isdir(path):
+    def write() -> str:
+        path = scratch_dir("aqp-partitioned-") + "/documents"
+        write_partitioned(spark,
+                          spark.read.parquet(f"{sf_dir}/documents.parquet"),
+                          path, "source")
         return path
-    path = tempfile.mkdtemp(prefix="aqp-partitioned-") + "/documents"
-    write_partitioned(spark,
-                      spark.read.parquet(f"{sf_dir}/documents.parquet"),
-                      path, "source")
-    _PART_CACHE[key] = path
-    return path
+    return StageCache.of(spark).build("scratch_path",
+                                      ("partitioned", sf_dir), write)
 
 
 def pruned_scan(spark: SparkSession, sf_dir: str,

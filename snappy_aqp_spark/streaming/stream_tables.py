@@ -33,10 +33,11 @@ from __future__ import annotations
 import os
 import re
 import shutil
-import tempfile
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..stage_cache import scratch_dir
 
 
 _DURATION_RE = re.compile(r"^\s*(\d+)\s*(ms|s|secs?|seconds?)?\s*$",
@@ -134,7 +135,7 @@ class StreamingManager:
         self.trigger_ms = 500
         self.tables: dict[str, StreamTableDef] = {}
         self._queries: dict[str, object] = {}   # table name -> StreamingQuery
-        self._root = state_root or tempfile.mkdtemp(prefix="aqp_streams_")
+        self._root = state_root or scratch_dir("aqp_streams_")
         # name -> list of callables(batch_df) fanned out per micro-batch
         self._sinks: dict[str, list] = {}
         # name -> list of ContinuousQuery; name -> batches seen so far

@@ -21,6 +21,9 @@ TABLE_COLUMNS: dict[str, tuple[str, ...]] = {
     "documents": ("doc_id", "text", "lang", "source", "n_chars"),
     "embeddings": ("vec_id", "embedding", "label"),
 }
+# the built-in schema names: sessions add the tables they register to
+# TABLE_COLUMNS, so membership there does not mean built-in
+BUILTIN_TABLES = frozenset(TABLE_COLUMNS)
 
 # conservative |value| upper bounds per numeric column (power-of-two), used
 # to pick reproducible-mode quantization scales for SQL-front-end queries

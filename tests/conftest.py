@@ -60,35 +60,9 @@ def _trim_spark_caches():
     s = SparkSession.getActiveSession()
     if s is None:
         return
-
-    def _safe(fn):
-        # isolate each eviction: one dead entry (e.g. a df from a
-        # stopped session) must not skip the remaining registries or
-        # the final clearCache — that would quietly disable the OOM
-        # mitigation this fixture exists for
-        try:
-            fn()
-        except Exception:
-            pass
-
-    from snappy_aqp_spark.pipeline import clusters, dual
-    from snappy_aqp_spark.plans import approx_query as aq
-    for df in list(aq._SAMPLE_CACHE.values()):
-        _safe(df.unpersist)
-    aq._SAMPLE_CACHE.clear()
-    aq._PLAN_CACHE.clear()
-    aq._BS_ROWS_MEMO.clear()
-    for df in list(dual._PREV_PERSISTED):
-        _safe(df.unpersist)
-    dual._PREV_PERSISTED.clear()
-    dual._PREV_KEY[0] = None
-    for _, df in list(dual._IX_CACHE.values()):
-        _safe(df.unpersist)
-    dual._IX_CACHE.clear()
-    for df in list(clusters._LABEL_CACHE.values()):
-        _safe(df.unpersist)
-    clusters._LABEL_CACHE.clear()
-    _safe(s.catalog.clearCache)
+    from snappy_aqp_spark.stage_cache import StageCache
+    StageCache.of(s).clear()
+    s.catalog.clearCache()
 
 
 def _duck_con(sf_dir: str):

@@ -108,20 +108,22 @@ def test_bootstrap_form_pick_bit_identical(spark, duck):
     trial-unrolled wide aggregate above. Both forms must be bit-identical
     (integer trial sums) and both must match the DuckDB oracle replay."""
     from snappy_aqp_spark.plans import approx_query as aq
+    from snappy_aqp_spark.stage_cache import StageCache
+    cache = StageCache.of(spark)
     spec = APPROX_SPECS["bs_sum_group"]
     tables = load_tables(spark, SF_SMALL, _tables_for(spec))
 
     # token-less call: no memo entry, no count job — the WIDE (scale-
-    # safe default) branch runs (same no-token policy as _SAMPLE_CACHE)
-    aq._BS_ROWS_MEMO.pop((spec, SF_SMALL), None)
+    # safe default) branch runs (same no-token policy as the sample cache)
+    cache.pop("bs_rows", (spec, SF_SMALL))
     res_w = run_approx_query(spark, spec, tables)
-    assert (spec, None) not in aq._BS_ROWS_MEMO
+    assert (spec, None) not in cache.entries("bs_rows")
     compare_frames(res_w, duck.sql(oracle_sql_for(spec)))
 
     # token'd call at sf0.001: the memoized count is tiny -> the
     # cross-join branch fires on the SAME data
     res_x = run_approx_query(spark, spec, tables, cache_token=SF_SMALL)
-    n = aq._BS_ROWS_MEMO[(spec, SF_SMALL)]
+    n = cache.get("bs_rows", (spec, SF_SMALL))
     assert n * spec.trials <= aq._BS_XJOIN_MAX_CELLS
     compare_frames(res_x, duck.sql(oracle_sql_for(spec)))
     assert res_x.toPandas().values.tolist() == \

@@ -1825,6 +1825,7 @@ def test_bm25_index_stages_survive_new_queries(spark):
     import pandas as pd
     from snappy_aqp_spark.pipeline import dual
     from snappy_aqp_spark.pipeline.retrieval import bm25_topk_stages
+    from snappy_aqp_spark.stage_cache import StageCache
 
     docs = [(i, f"alpha beta gamma token{i % 7} token{i % 3} delta")
             for i in range(40)]
@@ -1836,17 +1837,17 @@ def test_bm25_index_stages_survive_new_queries(spark):
                                    table="__bm_reuse_docs")
         return dual.run_stages(spark, st, fin).toPandas()
 
+    cache = StageCache.of(spark)
     run("doc_id = 0")
-    cached = {n: id(e[1]) for n, e in dual._IX_CACHE.items()
+    cached = {n: id(e[1]) for n, e in cache.entries("index").items()
               if "__bm" in n}
     assert cached                                   # index stages cached
     warm = run("doc_id = 5")                        # DIFFERENT query
-    after = {n: id(e[1]) for n, e in dual._IX_CACHE.items()
+    after = {n: id(e[1]) for n, e in cache.entries("index").items()
              if "__bm" in n}
     assert after == cached                          # reused, not rebuilt
     # cold control: drop the index cache and recompute from scratch
-    for n in list(dual._IX_CACHE):
-        dual._IX_CACHE.pop(n)[1].unpersist()
+    cache.clear("index")
     cold = run("doc_id = 5")
     pd.testing.assert_frame_equal(warm, cold)
 

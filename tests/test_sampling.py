@@ -220,7 +220,7 @@ def test_sample_blocks_freed_by_drop_invalidate_and_rebuild(
     """The frame a sample build persists (coalesced for the one-file base)
     is the one the temp view and the sample cache hold: dropping the
     table, invalidating its base and rebuilding it each free its blocks."""
-    from snappy_aqp_spark.plans.approx_query import invalidate_base_table
+    from snappy_aqp_spark.stage_cache import StageCache
     layout_sessions = _layout_sessions(spark, layout_bases, "lifetime")
 
     def build(extra=""):
@@ -241,7 +241,7 @@ def test_sample_blocks_freed_by_drop_invalidate_and_rebuild(
 
     new = build()
     for aqp in layout_sessions.values():
-        invalidate_base_table("lineitem", aqp._token)
+        StageCache.of(spark).evict(aqp._token, base="lineitem")
     assert not new & _cached_rdd_ids(spark)
 
     new = build()
@@ -401,8 +401,8 @@ def test_multi_sample_build_prefilter_and_fallback_branches(spark, tmp_path,
     import pandas as pd
 
     from snappy_aqp_spark.api import AQPSession
-    from snappy_aqp_spark.plans import approx_query as aq
     from snappy_aqp_spark.sampling import samplers as S
+    from snappy_aqp_spark.stage_cache import StageCache
 
     df = spark.range(20000).selectExpr(
         "id AS k1", "id % 2 AS grp", "id * 3 AS v")
@@ -415,7 +415,7 @@ def test_multi_sample_build_prefilter_and_fallback_branches(spark, tmp_path,
                               ("fallback", 0)):
         monkeypatch.setattr(S, "_OVERSAMPLE", oversample)
         solo = stratified_sample(df, spec).toPandas()
-        aq._SAMPLE_CACHE.clear()
+        StageCache.of(spark).clear("sample")
         built = aqp.create_sample_tables(
             [("pf_s", spec)], str(tmp_path / f"pf_{label}"))
         multi = built["pf_s"].toPandas()

@@ -763,8 +763,8 @@ def test_mutation_invalidates_sample_and_plan_caches(spark):
     the mutated base so the next approx query sees the new rows."""
     import pyspark.sql.utils  # noqa: F401
     from snappy_aqp_spark.api import AQPSession
-    from snappy_aqp_spark.plans.approx_query import (_PLAN_CACHE,
-                                                     _SAMPLE_CACHE)
+    from snappy_aqp_spark.stage_cache import StageCache
+    cache = StageCache.of(spark)
     aqp = AQPSession(spark, data_token="mut-test", error=0.5,
                      confidence=0.95, behavior="do_nothing")
     aqp.load_tables(SF_SMALL, ("lineitem",))
@@ -773,9 +773,9 @@ def test_mutation_invalidates_sample_and_plan_caches(spark):
     aqp.sql("SELECT sum(l_extendedprice) AS s FROM lineitem "
             "WITH ERROR 0.5").collect()
     assert any(k[0].base_table == "lineitem" and k[1] == "mut-test"
-               for k in _SAMPLE_CACHE)
+               for k in cache.entries("sample"))
     assert any(k[0].sample.base_table == "lineitem" and k[1] == "mut-test"
-               for k in _PLAN_CACHE)
+               for k in cache.entries("plan"))
     # the temp view is not insertable -> Spark raises, but invalidation
     # must happen BEFORE the engine attempt (mutation-first semantics)
     try:
@@ -783,35 +783,31 @@ def test_mutation_invalidates_sample_and_plan_caches(spark):
     except Exception:
         pass
     assert not any(k[0].base_table == "lineitem" and k[1] == "mut-test"
-                   for k in _SAMPLE_CACHE)
+                   for k in cache.entries("sample"))
     assert not any(k[0].sample.base_table == "lineitem" and k[1] == "mut-test"
-                   for k in _PLAN_CACHE)
+                   for k in cache.entries("plan"))
 
 
 def test_mutation_invalidation_scope(spark):
     """eviction covers the FROM relation of join-sampled plans and stays
     scoped to the mutating session's data token."""
-    from snappy_aqp_spark.plans.approx_query import (_PLAN_CACHE,
-                                                     invalidate_base_table)
     from snappy_aqp_spark.specs import ApproxAgg, ApproxQuerySpec, SampleSpec
+    from snappy_aqp_spark.stage_cache import StageCache
 
-    class FakeDF:
-        def unpersist(self):
-            pass
-
+    cache = StageCache.of(spark)
     spec = ApproxQuerySpec(
         sample=SampleSpec("orders", ("o_orderkey",), ("o_orderpriority",),
                           "hash", fraction=0.1, seed=1),
         from_relation="lineitem",
         aggs=(ApproxAgg("sum", "o_totalprice", "s", 2.0 ** 19),))
-    _PLAN_CACHE[(spec, "tokA")] = FakeDF()
-    _PLAN_CACHE[(spec, "tokB")] = FakeDF()
+    cache.put("plan", (spec, "tokA"), spark.range(1))
+    cache.put("plan", (spec, "tokB"), spark.range(2))
     # from_relation counts as a touched table; token scopes the eviction
-    invalidate_base_table("lineitem", token="tokA")
-    assert (spec, "tokA") not in _PLAN_CACHE
-    assert (spec, "tokB") in _PLAN_CACHE
-    invalidate_base_table("lineitem")            # token=None -> all tokens
-    assert (spec, "tokB") not in _PLAN_CACHE
+    cache.evict("tokA", base="lineitem")
+    assert (spec, "tokA") not in cache.entries("plan")
+    assert (spec, "tokB") in cache.entries("plan")
+    cache.evict(None, base="lineitem")           # token=None -> all tokens
+    assert (spec, "tokB") not in cache.entries("plan")
 
 
 def test_parse_aliases_and_comma_joins():
@@ -1303,7 +1299,6 @@ def test_sample_persist_and_attach(spark, tmp_path, duck):
     still match the oracle."""
     import os
     from snappy_aqp_spark.api import AQPSession
-    from snappy_aqp_spark.plans.approx_query import _SAMPLE_CACHE
     p = str(tmp_path / "li_persist")
     ddl = ("CREATE SAMPLE TABLE li_persist ON lineitem OPTIONS("
            "qcs 'l_returnflag', fraction '0.1', method 'hash', seed '42', "
@@ -1826,6 +1821,40 @@ def test_reattach_decides_hac_again(spark, behavior):
     s.drop_sample_table("li_hac")
 
 
+def test_catalog_table_measure_gets_a_derived_bound(spark, tmp_path):
+    """A session-registered table is not built-in: building its sample
+    derives max |amt| as the measure bound, so values of 0.5 survive the
+    quantization lattice (at the 2^20 fallback they quantized away and
+    the CI read 0), and the answer equals its DuckDB replay."""
+    import duckdb
+    loc = f"{tmp_path}/bound_cat"
+    spark.sql(f"CREATE TABLE bound_cat (k BIGINT, g STRING, amt DOUBLE) "
+              f"USING parquet LOCATION '{loc}'")
+    try:
+        spark.sql("INSERT INTO bound_cat SELECT id, CAST(id % 4 AS STRING), "
+                  "CAST(id % 3 AS DOUBLE) / 2 FROM range(800)")
+        s = AQPSession(spark, data_token="bound-cat")
+        s.register_catalog_table("bound_cat")
+        s.sql("CREATE SAMPLE TABLE bound_cat_s ON bound_cat OPTIONS("
+              "qcs 'g', fraction '0.5', method 'hash', seed '42', "
+              "keyColumns 'k')")
+        assert s.col_bounds["amt"] == 1.0
+        q = ("SELECT g, SUM(amt) AS sv, relative_error(sv) AS re "
+             "FROM bound_cat GROUP BY g ORDER BY g WITH ERROR 0.9")
+        an = s.analyze_sql(q)
+        assert [a.max_abs for a in an.spec.aggs] == [2.0]
+        got = s.sql(q)
+        assert all(r["re"] > 0 for r in got.collect())
+        con = duckdb.connect()
+        con.sql(f"CREATE VIEW bound_cat AS SELECT * FROM "
+                f"read_parquet('{loc}/*.parquet')")
+        compare_frames(got, con.sql(oracle_sql_for(an.spec)).df()
+                       .rename(columns=an.rename))
+        s.sql("DROP TABLE bound_cat_s")
+    finally:
+        spark.sql("DROP TABLE IF EXISTS bound_cat")
+
+
 def test_mutation_decides_hac_again(spark, tmp_path):
     """A cached strict decision is made again after a mutation
     pass-through: a constant measure has no sampling error, and the rows
@@ -1834,9 +1863,8 @@ def test_mutation_decides_hac_again(spark, tmp_path):
     spark.sql(f"CREATE TABLE hac_mut (k BIGINT, g STRING, amt DOUBLE) "
               f"USING parquet LOCATION '{tmp_path}/hac_mut'")
     try:
-        # amounts near the 2^20 fallback measure bound, which this table's
-        # measure gets: the error lattice resolves them, far smaller ones
-        # quantize to a zero CI
+        # the measure bound is derived from these amounts at sample build
+        # time; the rows the INSERT adds stay within twice that bound
         spark.sql("INSERT INTO hac_mut SELECT id, CAST(id % 2 AS STRING), "
                   "250000.0D FROM range(400)")
         s = AQPSession(spark, data_token="hac-mutation")
