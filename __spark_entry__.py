@@ -27,8 +27,7 @@ from snappy_aqp_spark.topk.api import (TopKRegistry, create_approx_ts_topk,
                                        query_approx_ts_topk)
 from snappy_aqp_spark.topk.oracle import topk_oracle_sql
 from snappy_aqp_spark.plans.approx_query import (load_tables, oracle_sql_for,
-                                                 run_approx_query,
-                                                 visible_columns)
+                                                 run_approx_query)
 from snappy_aqp_spark.specs import ApproxQuerySpec
 from snappy_aqp_spark.sql import frontend as fe
 from snappy_aqp_spark.stage_cache import StageCache, scratch_dir
@@ -163,12 +162,7 @@ def _sql_fixture_oracle(fx: dict) -> str:
     if analyzed.spec is None:
         stripped, _ = fe.strip_with_clause(fx["query"])
         return fe.fold_error_functions(stripped, analyzed.parsed)
-    sql = oracle_sql_for(analyzed.spec)
-    if analyzed.rename:
-        cols = [f"{c} AS {analyzed.rename.get(c, c)}"
-                for c in visible_columns(analyzed.spec)]
-        sql = f"SELECT {', '.join(cols)} FROM (\n{sql}\n) __renamed"
-    return sql
+    return oracle_sql_for(analyzed.spec, rename=analyzed.rename)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -1228,15 +1222,11 @@ def _auto_weighted_oracle() -> str:
     analyzed = analyze_text(_AUTOW_QUERY, cat, _SQL_DEFAULTS,
                             extra_cols={c.lower() for c in cols})
     assert analyzed.spec is not None
-    sql = oracle_sql_for(
+    return oracle_sql_for(
         analyzed.spec,
         sample_stages_override=sample_cte_stages(SampleSpec(**_AUTOW_P_KW),
-                                                 out_name="__sample"))
-    if analyzed.rename:
-        vis = [f"{c} AS {analyzed.rename.get(c, c)}"
-               for c in visible_columns(analyzed.spec)]
-        sql = f"SELECT {', '.join(vis)} FROM (\n{sql}\n) __renamed"
-    return sql
+                                                 out_name="__sample"),
+        rename=analyzed.rename)
 
 
 # AQP-282: approx query over an EXTERNAL (CSV) base table
@@ -1289,11 +1279,7 @@ def _external_csv_oracle() -> str:
                             {**_SQL_DEFAULTS, "col_bounds": _ext_col_bounds()},
                             extra_cols={c.lower() for c in _EXT_COLS})
     assert analyzed.spec is not None
-    sql = oracle_sql_for(analyzed.spec)
-    if analyzed.rename:
-        vis = [f"{c} AS {analyzed.rename.get(c, c)}"
-               for c in visible_columns(analyzed.spec)]
-        sql = f"SELECT {', '.join(vis)} FROM (\n{sql}\n) __renamed"
+    sql = oracle_sql_for(analyzed.spec, rename=analyzed.rename)
     # the driver's DuckDB has no 'orderline' view: inject it as the first
     # CTE of the oracle's top-level WITH list
     inject = (f"orderline AS (SELECT * FROM "
@@ -1527,12 +1513,7 @@ def _df_api_oracle() -> str:
     analyzed = analyze_text(chain_sql, build_catalog_from_ddl([_DFAPI_DDL]),
                             _SQL_DEFAULTS)
     assert analyzed.spec is not None
-    sql = oracle_sql_for(analyzed.spec)
-    if analyzed.rename:
-        vis = [f"{c} AS {analyzed.rename.get(c, c)}"
-               for c in visible_columns(analyzed.spec)]
-        sql = f"SELECT {', '.join(vis)} FROM (\n{sql}\n) __renamed"
-    return sql
+    return oracle_sql_for(analyzed.spec, rename=analyzed.rename)
 
 
 def _error_stats_runner(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1392,11 +1392,9 @@ class AQPSession:
                          analyzed=analyzed))
 
     def _run_analyzed(self, analyzed) -> DataFrame:
-        df = run_approx_query(self.spark, analyzed.spec, self.tables,
-                              cache_token=self._token)
-        if analyzed.rename:
-            df = df.withColumnsRenamed(analyzed.rename)
-        return df
+        return run_approx_query(self.spark, analyzed.spec, self.tables,
+                                cache_token=self._token,
+                                rename=analyzed.rename)
 
     def _derived_route(self, text: str) -> "Route | None":
         """Sample query in a FROM-clause subquery joined by an exact outer

@@ -611,15 +611,20 @@ def set_interactive_latency_mode(spark: SparkSession,
 
 def run_approx_query(spark: SparkSession, spec: ApproxQuerySpec,
                      tables: dict[str, DataFrame],
-                     cache_token: str | None = None) -> DataFrame:
-    """Execute the approximate query; returns the visible-result DataFrame.
-    With a ``cache_token`` the answer is kept in the session's ``plan``
-    cache, whatever the behavior; without one it is built per call."""
+                     cache_token: str | None = None,
+                     rename: dict[str, str] | None = None) -> DataFrame:
+    """Execute the approximate query; returns the visible-result DataFrame
+    with its columns renamed by ``rename`` (output column -> name). With a
+    ``cache_token`` that final DataFrame is kept in the session's ``plan``
+    cache, whatever the behavior, so a hit returns a Dataset Spark has
+    already analyzed and planned; without one it is built per call."""
+    def build() -> DataFrame:
+        out = _answer(spark, spec, tables, cache_token)
+        return out.withColumnsRenamed(rename) if rename else out
     if cache_token is None:
-        return _answer(spark, spec, tables, None)
+        return build()
     return StageCache.of(spark).build(
-        "plan", (spec, cache_token),
-        lambda: _answer(spark, spec, tables, cache_token))
+        "plan", (spec, cache_token, tuple((rename or {}).items())), build)
 
 
 def _answer(spark: SparkSession, spec: ApproxQuerySpec,
@@ -677,12 +682,14 @@ def _dict_select(frags: dict[str, str], keep: list[str]) -> str:
 
 
 def oracle_sql_for(spec: ApproxQuerySpec, dialect: str = DUCKDB,
-                   sample_stages_override: list | None = None) -> str:
+                   sample_stages_override: list | None = None,
+                   rename: dict[str, str] | None = None) -> str:
     """``sample_stages_override``: replaces the sample-derivation CTE chain
     (must end in a stage named ``__sample``). Used when the engine-side
     sample is ATTACHED rows rather than a re-derivation — e.g. the AQP-211
     auto-detected weighted tables, whose oracle replays the PRODUCING
-    spec's chain and then reads the stored hidden columns verbatim."""
+    spec's chain and then reads the stored hidden columns verbatim.
+    ``rename`` (output column -> name) mirrors ``run_approx_query``'s."""
     gcols, qcols = _gcols(spec), _qcols(spec)
     stages = []
     # sampled subquery trees: each gets its own sample CTE (__subs{i}),
@@ -874,4 +881,8 @@ def oracle_sql_for(spec: ApproxQuerySpec, dialect: str = DUCKDB,
         final += f" ORDER BY {', '.join(spec.order_by)}"
     if spec.limit is not None:
         final += f" LIMIT {spec.limit}"
-    return stages_to_sql(stages, final)
+    sql = stages_to_sql(stages, final)
+    if not rename:
+        return sql
+    cols = [f"{c} AS {rename.get(c, c)}" for c in visible_columns(spec)]
+    return f"SELECT {', '.join(cols)} FROM (\n{sql}\n) __renamed"

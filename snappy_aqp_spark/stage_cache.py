@@ -9,16 +9,18 @@ stopped session's entries are unreachable. Each entry lives under a kind:
 - ``sample``: (sample spec, data token) -> the persisted sample. Its
   content is a function of the spec and the data the token pins, so
   sessions that share a token share samples.
-- ``plan``: (query spec, data token) -> the relation the query answers
-  with. Traced medians of the repository benchmark (perfbench
-  interactive_sql, ~5k-row samples, 4-core VM): a plan miss spends ~145 ms
-  in AQPSession.sql building the DataFrame, a hit ~8 ms; Spark then plans
-  a hit in ~30 ms and executes it in ~190 ms (1 job over a one-partition
-  sample). Every HAC behavior is cached: the error-contract decision of
-  strict / run_on_full_table / partial_run_on_base_table is a function of
-  the spec and the data, like the plan, so the entry holds the relation
-  the decision chose (the visible rows or the exact query). A strict raise
-  is never cached and repeats on every call.
+- ``plan``: (query spec, data token, rename items) -> the final, renamed
+  DataFrame the query answers with, so a hit returns a Dataset Spark has
+  already analyzed and planned. Traced medians of the repository
+  benchmark (perfbench interactive_sql, ~5k-row samples, 4-core VM): a
+  plan miss spends ~80-100 ms in AQPSession.sql building the DataFrame; a
+  hit spends ~0.4 ms in it, ~0.2 ms in Spark planning and ~57 ms in
+  execution (1 job over a one-partition sample). Every HAC behavior is
+  cached: the error-contract decision of strict / run_on_full_table /
+  partial_run_on_base_table is a function of the spec and the data, like
+  the plan, so the entry holds the relation the decision chose (the
+  visible rows or the exact query). A strict raise is never cached and
+  repeats on every call.
 - ``bs_rows``: (query spec, data token) -> the sample's row count, which
   picks the bootstrap inner form.
 - ``pipeline``: the latest (stages, final) text -> the stage frames it

@@ -25,7 +25,7 @@ import re
 import pytest
 
 from snappy_aqp_spark.api import AQPSession
-from snappy_aqp_spark.plans.approx_query import oracle_sql_for, visible_columns
+from snappy_aqp_spark.plans.approx_query import oracle_sql_for
 from tests.conftest import SF_SMALL, compare_frames
 
 
@@ -224,11 +224,7 @@ def _check_vs_oracle(session, duckcon, q: str, rtol: float = 0.0,
                                        for i in range(len(sp.columns))]
         compare_frames(_PandasFrame(sp), dk, rtol=rtol, atol=atol)
         return
-    sql = oracle_sql_for(an.spec)
-    if an.rename:
-        cols = [f"{c} AS {an.rename.get(c, c)}"
-                for c in visible_columns(an.spec)]
-        sql = f"SELECT {', '.join(cols)} FROM (\n{sql}\n) __renamed"
+    sql = oracle_sql_for(an.spec, rename=an.rename)
     sp = session.sql(q).toPandas()
     dk = duckcon.sql(_duckify(sql)).df()
     if sorted(sp.columns) != sorted(dk.columns):
